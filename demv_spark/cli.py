@@ -22,10 +22,8 @@ from __future__ import annotations
 import argparse
 from collections.abc import Mapping, Sequence
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from demv_spark.functions import metrics as M
 from demv_spark.functions.metrics import group_condition
 from demv_spark.ml import evaluation as E
 
@@ -40,54 +38,6 @@ def _feature_cols(df: DataFrame, label: str) -> list[str]:
         for f in df.schema.fields
         if f.name != label and isinstance(f.dataType, NumericType)
     ]
-
-
-def _reduction_cross_val(
-    df: DataFrame,
-    feature_cols: Sequence[str],
-    label: str,
-    unpriv,
-    positive_label,
-    sensitive: Sequence[str],
-    reduction_factory,
-    k: int,
-    seed: int,
-) -> DataFrame:
-    """k-fold CV with a fit/predict reduction (EG / GridSearch) as the
-    model — the exp=True branch of the reference's cross_val
-    (utils.py:136-158 with the fairlearn wrapper)."""
-    folded = E.assign_folds(df, k, seed, exact=False).cache()
-    rows = []
-    for fold in range(k):
-        train = folded.filter(F.col("fold") != fold)
-        test = folded.filter(F.col("fold") == fold)
-        red = reduction_factory()
-        red.fit(train, list(feature_cols))
-        pred = red.predict(test)
-        suite = M.fairness_suite(
-            pred,
-            unpriv,
-            F.col("prediction") == positive_label,
-            F.col(label) == positive_label,
-            label,
-            "prediction",
-        ).collect()[0]
-        loss = M.zero_one_loss_diff(
-            pred, label, "prediction", list(sensitive)
-        ).collect()[0][0]
-        rows.append(
-            {
-                "fold": fold,
-                "stat_par": suite["stat_par"],
-                "disp_imp": suite["disp_imp"],
-                "eq_odds": suite["eq_odds"],
-                "acc": suite["acc"],
-                "zero_one_loss": loss,
-            }
-        )
-    # all folds collected — release the fold cache (round 13)
-    folded.unpersist()
-    return df.sparkSession.createDataFrame(rows)
 
 
 def run_metrics(
@@ -118,21 +68,21 @@ def run_metrics(
             df, features, label, clf(), unpriv, positive_label, sensitive,
             k=k, seed=seed,
         )
-    if method == "eg":
-        from demv_spark.ml.eg import ExponentiatedGradientBGL
+    if method in ("eg", "grid"):
+        from demv_spark.ml.eg import ExponentiatedGradientBGL, GridSearchBGL
 
-        return _reduction_cross_val(
-            df, features, label, unpriv, positive_label, sensitive,
-            lambda: ExponentiatedGradientBGL(clf, sensitive, label, seed=seed),
-            k, seed,
-        )
-    if method == "grid":
-        from demv_spark.ml.eg import GridSearchBGL
+        reduction = ExponentiatedGradientBGL if method == "eg" else GridSearchBGL
 
-        return _reduction_cross_val(
-            df, features, label, unpriv, positive_label, sensitive,
-            lambda: GridSearchBGL(clf, sensitive, label, seed=seed),
-            k, seed,
+        # the exp=True branch of the reference's cross_val (utils.py:
+        # 136-158 with the fairlearn wrapper): the fitted reduction is
+        # the fold's model
+        def fit(train):
+            red = reduction(clf, sensitive, label, seed=seed)
+            return red.fit(train, features).predict
+
+        return E.cross_val(
+            df, features, label, None, unpriv, positive_label, sensitive,
+            k=k, seed=seed, fit=fit,
         )
     if method in DEMV_STRATEGIES:
         from demv_spark.operators.balancer import DEMV

@@ -149,18 +149,23 @@ def zero_one_loss_diff(
     y_pred: str,
     sensitive: Sequence[str],
     alias: str = "zero_one_loss",
+    group_by: Sequence[str] = (),
 ) -> DataFrame:
     """M5 (utils.py:116-121, fairlearn MetricFrame.difference()).
 
     Per-sensitive-group zero-one loss, then max between-group
     difference (max − min). Two-level aggregation; the second level
-    runs over |groups| rows only.
+    runs over |groups| rows only. ``group_by`` columns (e.g. a CV
+    fold) give one row per key, each equal to the ungrouped result on
+    that key's rows.
     """
     miss = F.when(F.col(y_true) != F.col(y_pred), F.lit(1)).otherwise(F.lit(0))
-    per_group = df.groupBy(*sensitive).agg(
+    per_group = df.groupBy(*group_by, *sensitive).agg(
         (F.sum(miss) / F.count(F.lit(1))).alias("loss")
     )
-    return per_group.agg((F.max("loss") - F.min("loss")).alias(alias))
+    return per_group.groupBy(*group_by).agg(
+        (F.max("loss") - F.min("loss")).alias(alias)
+    )
 
 
 def zero_one_loss_by_group(
@@ -300,15 +305,18 @@ def fairness_suite(
     true_pos: Column,
     y_true: str,
     y_pred: str,
+    group_by: Sequence[str] = (),
 ) -> DataFrame:
     """M1+M2+M3+accuracy fused into ONE aggregate job (12 conditional
     counts — the reference re-scans the table ~20× for the same
     numbers, utils.py:252-260). Single-row DataFrame with columns
-    (stat_par, disp_imp, eq_odds, acc).
+    (stat_par, disp_imp, eq_odds, acc); with ``group_by`` columns
+    (e.g. a CV fold) one row per key, the key columns first, each
+    equal to the ungrouped suite on that key's rows.
     """
     g, ng = unpriv, ~unpriv
     match = F.when(F.col(y_true) == F.col(y_pred), F.lit(1)).otherwise(F.lit(0))
-    agg = df.agg(
+    agg = df.groupBy(*group_by).agg(
         _cnt(g & pred_pos).alias("up"),
         _cnt(g).alias("u"),
         _cnt(ng & pred_pos).alias("pp"),
@@ -335,6 +343,7 @@ def fairness_suite(
     fpr_u = _guard(F.col("u_pp_tn"), F.col("u_pn"))
     fpr_p = _guard(F.col("p_pp_tn"), F.col("p_pn"))
     return agg.select(
+        *group_by,
         (u_rate - p_rate).alias("stat_par"),
         di.alias("disp_imp"),
         F.greatest(F.abs(tpr_u - tpr_p), F.abs(fpr_u - fpr_p)).alias("eq_odds"),

@@ -149,9 +149,11 @@ class ExponentiatedGradientBGL:
         return F.broadcast(spark.createDataFrame(rows))
 
     def fit(self, df: DataFrame, feature_cols: Sequence[str]) -> "ExponentiatedGradientBGL":
-        from demv_spark.ml.evaluation import _pipeline
+        from demv_spark.ml.evaluation import _owned_checkpoint, _pipeline
 
-        df = df.cache()
+        # every fit and loss census reads this fit's own copy, so
+        # releasing it cannot evict a table the caller cached
+        df, release = _owned_checkpoint(df)
         census = (
             df.groupBy(*self.sensitive).agg(F.count(F.lit(1)).alias("n")).collect()
         )
@@ -193,8 +195,8 @@ class ExponentiatedGradientBGL:
                     0.0, 1 + self.eta * (losses[g] - self.bound)
                 )
         # fits and loss censuses are all materialized above; the
-        # fitted models never read df again (round 13 cache hygiene)
-        df.unpersist()
+        # fitted models never read df again
+        release()
         return self
 
     def predict(self, df: DataFrame, out: str = "prediction") -> DataFrame:
@@ -344,9 +346,9 @@ class GridSearchBGL:
         return grids
 
     def fit(self, df: DataFrame, feature_cols: Sequence[str]) -> "GridSearchBGL":
-        from demv_spark.ml.evaluation import _pipeline
+        from demv_spark.ml.evaluation import _owned_checkpoint, _pipeline
 
-        df = df.cache()
+        df, release = _owned_checkpoint(df)  # owned copy, as in EG
         census = (
             df.groupBy(*self.sensitive).agg(F.count(F.lit(1)).alias("n")).collect()
         )
@@ -401,8 +403,8 @@ class GridSearchBGL:
             else (lambda r: (max(r["losses"].values()), r["idx"]))
         )
         self.best_idx_ = min(pool, key=key)["idx"]
-        # grid fits and censuses fully collected above (round 13)
-        df.unpersist()
+        # grid fits and censuses fully collected above
+        release()
         return self
 
     def predict(self, df: DataFrame, out: str = "prediction") -> DataFrame:

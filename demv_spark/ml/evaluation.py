@@ -10,12 +10,16 @@ metrics per fold (utils.py:136-158, 242-261). Here:
   Catalyst prunes;
 - classifiers are MLlib estimators (distributed fit/predict) behind
   the same four names the reference uses (generatemetrics.py:172-184);
-- the featurized table is cached once before the k-fold loop — the
-  reference re-slices an in-memory pandas frame, the Spark analogue
-  is reuse of a cached DataFrame, not 10× ETL recompute;
-- per-fold metrics are ONE fused aggregate each (fairness_suite), and
-  the final report is mean ± std over the tiny per-fold table
-  (A5/E10), with explode for list-valued cells (E11).
+- ``cross_val`` is the one fold loop: the fold-assigned table is
+  cached for the call; each fold's debiased training split is
+  materialised once (eager localCheckpoint) so the scaler summary and
+  the classifier's passes do not re-run the debias; the model is a
+  fit→predict hook (MLlib pipeline by default, the EG/GridSearch
+  reductions from cli); all k folds are scored in ONE grouped pass
+  per metric call (fairness_suite / zero_one_loss_diff grouped by
+  fold), and every cache and checkpoint is released when it returns;
+- the final report is mean ± std over the tiny per-fold table in one
+  aggregate (A5/E10), with explode for list-valued cells (E11).
 
 sklearn↔MLlib gaps (documented, SURVEY §7): GBTClassifier is
 binary-only → multiclass falls back to RandomForest; LinearSVC gets
@@ -31,6 +35,7 @@ remains out of scope (a λ-grid sweep of the same machinery).
 from __future__ import annotations
 
 from collections.abc import Callable, Sequence
+from functools import reduce
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
@@ -189,6 +194,18 @@ def _pipeline(feature_cols: Sequence[str], label_col: str, classifier):
     return Pipeline(stages=[assembler, scaler, clf])
 
 
+def _owned_checkpoint(df: DataFrame) -> tuple[DataFrame, Callable[[], None]]:
+    """Eager localCheckpoint of ``df`` plus a callable that frees its
+    blocks. The checkpoint is a new RDD only this call holds: no
+    CacheManager entry (``cache`` on a table the caller already cached
+    is a no-op, and the matching unpersist would evict the caller's
+    entry), and the release touches no other RDD. Release only once
+    nothing lazy still reads the checkpoint."""
+    cp = df.localCheckpoint(eager=True)
+    rdd = cp._jdf.queryExecution().logical().rdd()
+    return cp, lambda: rdd.unpersist(False)
+
+
 def out_of_fold_predictions(
     df: DataFrame,
     feature_cols: Sequence[str],
@@ -293,25 +310,40 @@ def cross_val(
     k: int = 10,
     seed: int = 2,
     debias: Callable[[DataFrame], DataFrame] | None = None,
+    fit: Callable[[DataFrame], Callable[[DataFrame], DataFrame]] | None = None,
 ) -> DataFrame:
     """E4+E5 (utils.py:136-158): k-fold cross-validation collecting
     the fairness metric suite per fold. `unpriv` is a Column predicate
     over the raw columns; `positive_label` the positive class value.
     Optional `debias` callable (e.g. DEMV fit_transform) runs on each
     training split only, mirroring _demv_training (utils.py:231-239).
+    Optional `fit` replaces the `classifier` pipeline as the model: it
+    takes a training split and returns a predict callable that adds a
+    `prediction` column to a test split (the EG/GridSearch reductions,
+    the reference's exp=True branch).
 
     Returns one row per fold: (fold, stat_par, disp_imp, eq_odds, acc,
     zero_one_loss)."""
+    if fit is None:
+        pipe = _pipeline(feature_cols, label_col, classifier)
+
+        def fit(train):
+            return pipe.fit(train).transform
+
     folded = assign_folds(df, k, seed, exact=False).cache()
-    pipe = _pipeline(feature_cols, label_col, classifier)
-    rows = []
-    for fold in range(k):
-        train = folded.filter(F.col("fold") != fold)
-        test = folded.filter(F.col("fold") == fold)
-        if debias is not None:
-            train = debias(train)
-        model = pipe.fit(train)
-        pred = model.transform(test)
+    releases = []
+    try:
+        preds = []
+        for fold in range(k):
+            train = folded.filter(F.col("fold") != fold)
+            test = folded.filter(F.col("fold") == fold)
+            if debias is not None:
+                # materialised once: every pass of the fit over the
+                # split reads it instead of re-running the debias
+                train, release = _owned_checkpoint(debias(train))
+                releases.append(release)
+            preds.append(fit(train)(test))
+        pred = reduce(DataFrame.unionByName, preds)
         suite = M.fairness_suite(
             pred,
             unpriv,
@@ -319,21 +351,21 @@ def cross_val(
             F.col(label_col) == positive_label,
             label_col,
             "prediction",
-        ).collect()[0]
-        loss = M.zero_one_loss_diff(pred, label_col, "prediction", sensitive).collect()[0][0]
-        rows.append(
-            {
-                "fold": fold,
-                "stat_par": suite["stat_par"],
-                "disp_imp": suite["disp_imp"],
-                "eq_odds": suite["eq_odds"],
-                "acc": suite["acc"],
-                "zero_one_loss": loss,
-            }
-        )
-    # every fold's metrics are collected above — nothing lazy escapes,
-    # so the fold cache releases with the call (round 13)
-    folded.unpersist()
+            group_by=["fold"],
+        ).collect()
+        loss = M.zero_one_loss_diff(
+            pred, label_col, "prediction", sensitive, group_by=["fold"]
+        ).collect()
+    finally:
+        # every fold's metrics are collected above — nothing lazy
+        # escapes, so the fold cache and the splits release with the call
+        folded.unpersist()
+        for release in releases:
+            release()
+    suite = {r["fold"]: r.asDict() for r in suite}
+    loss = {r["fold"]: r.asDict() for r in loss}
+    # a fold with no test rows keeps its row, with null metrics
+    rows = [{**suite.get(f, {}), **loss.get(f, {}), "fold": f} for f in range(k)]
     return df.sparkSession.createDataFrame(rows)
 
 
@@ -412,20 +444,19 @@ def sweep_stops(
 
 def metrics_report(per_fold: DataFrame, metric_cols: Sequence[str] | None = None) -> DataFrame:
     """E10/A5 (utils.py:330-340): mean ± population std per metric
-    over the per-fold table. Long form: (metric, mean, std)."""
+    over the per-fold table. Long form: (metric, mean, std), one row
+    per metric in column order — ONE aggregate builds every metric's
+    (metric, mean, std) struct and ``inline`` turns them into rows."""
     metric_cols = metric_cols or [c for c in per_fold.columns if c != "fold"]
-    pieces = [
-        per_fold.agg(
+    stats = [
+        F.struct(
             F.lit(c).alias("metric"),
             F.avg(c).alias("mean"),
             F.coalesce(F.stddev_pop(c), F.lit(0.0)).alias("std"),
         )
         for c in metric_cols
     ]
-    out = pieces[0]
-    for p in pieces[1:]:
-        out = out.unionByName(p)
-    return out
+    return per_fold.agg(F.array(*stats).alias("r")).select(F.inline("r"))
 
 
 def explode_metric_lists(df: DataFrame, list_cols: Sequence[str]) -> DataFrame:

@@ -25,7 +25,9 @@ def get_spark(
     Parameters are overridable for tests/bench; on a real cluster the
     same conf keys apply — only ``master`` changes.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    # default to the cores this process may run on, never a fixed
+    # count that oversubscribes a small box
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or int(cpus)
 

@@ -122,10 +122,6 @@ def _spread_target(path: str, parallelism: int) -> int:
         per = int(_os.environ.get("DEMV_SPARK_SPREAD_SPLIT_BYTES", "262144"))
     except ValueError:
         per = 262144
-    try:
-        floor = int(_os.environ.get("DEMV_SPARK_SPREAD_MIN_PARTS", "8"))
-    except ValueError:
-        floor = 8
     if per <= 0:
         return parallelism
     size = 0
@@ -140,7 +136,7 @@ def _spread_target(path: str, parallelism: int) -> int:
             size = _os.path.getsize(path)
     except OSError:
         return parallelism
-    return max(min(floor, parallelism), min(parallelism, math.ceil(size / per)))
+    return max(min(2, parallelism), min(parallelism, math.ceil(size / per)))
 
 
 def _conf_bytes(spark: SparkSession, key: str, default: int) -> int:

@@ -62,6 +62,34 @@ def biased(spark):
     ).cache()
 
 
+def test_reduction_fit_keeps_the_callers_cache(spark):
+    """EG/GridSearch cache the training table for their fits and
+    release it after. A table the caller cached must stay cached."""
+    from pyspark import StorageLevel
+
+    from demv_spark.ml.eg import GridSearchBGL
+
+    data = spark.range(120).select(
+        (F.col("id") % 7).cast("double").alias("f1"),
+        (F.col("id") % 2).cast("int").alias("s0"),
+        (F.col("id") % 3 == 0).cast("int").alias("y"),
+    ).cache()
+    data.count()
+
+    def factory():
+        return E.build_classifier("logistic", "y", "__features", 2).setMaxIter(3)
+
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    ExponentiatedGradientBGL(factory, ["s0"], "y", iters=1).fit(data, ["f1"])
+    assert data.storageLevel != StorageLevel.NONE
+    GridSearchBGL(factory, ["s0"], "y", grid_size=2).fit(data, ["f1"])
+    assert data.storageLevel != StorageLevel.NONE
+    # and the fits' own copies are gone
+    assert set(jsc.getPersistentRDDs().keySet().toArray()) <= before
+    data.unpersist()
+
+
 @pytest.mark.slow
 def test_eg_bgl_matches_reference_behavior(biased):
     """Reference parity (generatemetrics.py:101-113 via BASELINE.md):

@@ -115,6 +115,31 @@ def test_fairness_suite_matches_individual(df):
     assert suite["acc"] == pytest.approx(acc, abs=1e-12)
 
 
+def test_grouped_suite_and_loss_equal_per_group_filters(spark):
+    """group_by (the CV fold loop scores all folds in one pass): each
+    key's row equals the ungrouped call on that key's rows, exactly."""
+    folds = spark.createDataFrame(
+        [(f, *r) for f in range(3) for r in ROWS[f:] + ROWS[: 2 * f]],
+        ["fold", "sens", "y_pred", "y_true"],
+    )
+    args = (_unpriv(), _pred_pos(), _true_pos(), "y_true", "y_pred")
+    suite = M.fairness_suite(folds, *args, group_by=["fold"])
+    loss = M.zero_one_loss_diff(
+        folds, "y_true", "y_pred", ["sens"], group_by=["fold"]
+    )
+    assert suite.columns == ["fold", "stat_par", "disp_imp", "eq_odds", "acc"]
+    assert loss.columns == ["fold", "zero_one_loss"]
+    suite = {r["fold"]: r for r in suite.collect()}
+    loss = {r["fold"]: r for r in loss.collect()}
+    assert set(suite) == set(loss) == {0, 1, 2}
+    for f in range(3):
+        part = folds.filter(F.col("fold") == f).drop("fold")
+        want = M.fairness_suite(part, *args).collect()[0]
+        assert tuple(suite[f])[1:] == tuple(want)
+        want_loss = M.zero_one_loss_diff(part, "y_true", "y_pred", ["sens"])
+        assert loss[f]["zero_one_loss"] == want_loss.collect()[0][0]
+
+
 def test_fairness_by_group_one_vs_rest(df):
     """Each sens value's row must equal the corresponding single-split
     metric with unpriv = (sens == v)."""

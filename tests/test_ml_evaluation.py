@@ -73,6 +73,32 @@ def test_cross_val_logistic_learns(data):
     assert report["acc"]["mean"] == pytest.approx(sum(accs) / 3, abs=1e-9)
 
 
+def test_metrics_report_matches_per_metric_union(spark):
+    """The one-aggregate report gives exactly the rows and schema of
+    the per-metric form it replaced: one (metric, mean, std) aggregate
+    per metric, unioned."""
+    per_fold = spark.createDataFrame(
+        [
+            {"fold": 0, "acc": 0.8, "stat_par": -0.1, "zero_one_loss": 0.05},
+            {"fold": 1, "acc": 0.7, "stat_par": None, "zero_one_loss": 0.1},
+            {"fold": 2, "acc": 0.9, "stat_par": 0.3, "zero_one_loss": 0.0},
+        ]
+    )
+    for src in (per_fold, per_fold.filter(F.col("fold") == 1)):
+        pieces = [
+            src.agg(
+                F.lit(c).alias("metric"),
+                F.avg(c).alias("mean"),
+                F.coalesce(F.stddev_pop(c), F.lit(0.0)).alias("std"),
+            )
+            for c in ("acc", "stat_par", "zero_one_loss")
+        ]
+        old = pieces[0].unionByName(pieces[1]).unionByName(pieces[2])
+        new = E.metrics_report(src)
+        assert new.schema == old.schema
+        assert new.collect() == old.collect()
+
+
 def test_cross_val_with_demv_debias(data):
     clf = E.build_classifier("logistic", "y", "__features", n_classes=2)
 

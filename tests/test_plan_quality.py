@@ -788,6 +788,17 @@ def test_cv_fold_caches_release_with_the_call(spark):
         unpriv=F.col("g") == 1.0, positive_label=1.0, sensitive=["g"],
         k=2,
     ).collect()
+    # the debiased training split is checkpointed once per fold; its
+    # blocks must go with the call too
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    E.cross_val(
+        data, ["f1"], "y", clf,
+        unpriv=F.col("g") == 1.0, positive_label=1.0, sensitive=["g"],
+        k=2, debias=lambda t: t.filter(F.col("f1") != 3.0),
+    ).collect()
+    after = set(jsc.getPersistentRDDs().keySet().toArray())
+    assert after <= before, "debiased-split checkpoints outlived the call"
     cm = spark._jsparkSession.sharedState().cacheManager()
     assert cm.isEmpty(), "fold caches outlived the CV calls"
 
