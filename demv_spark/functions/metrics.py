@@ -20,8 +20,12 @@ Reproduces the *as-implemented* semantics of the reference
 Execution shape: every metric is ONE fused aggregate pass over the
 predictions table (conditional-count fusion, utils.py re-scans 4-10×
 per metric). ``fairness_suite`` fuses all scalar metrics + accuracy
-into a single job. All pure Spark SQL expressions — no UDFs — so each
-metric also renders to ANSI SQL for the DuckDB oracle.
+into a single job. The two-group metrics (M1–M3 and both suites)
+read one conditional-count list (``_counts``: exact counts, or
+weighted masses for ``weighted_fairness_suite``), and the M2 and M3
+expressions are each written once. All pure Spark SQL expressions —
+no UDFs — so each metric also renders to ANSI SQL for the DuckDB
+oracle.
 
 All ratios here divide exact integer counts, so results are
 bit-identical across engines (IEEE-754 correctly-rounded division).
@@ -29,7 +33,7 @@ bit-identical across engines (IEEE-754 correctly-rounded division).
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
@@ -64,6 +68,64 @@ def _guard(num: Column, den: Column) -> Column:
     return F.when(den == 0, F.lit(0.0)).otherwise(num / den)
 
 
+def _counts(
+    unpriv: Column,
+    pred_pos: Column,
+    true_pos: Column,
+    cnt: Callable[[Column], Column] = _cnt,
+) -> list[Column]:
+    """The conditional counts M1–M3 read, one aliased column each:
+    u/p (group size), up/pp (predicted positive), u_pp_tp/p_pp_tp
+    (predicted and true positive), u_pn/p_pn (predicted negative),
+    u_pp_tn/p_pp_tn (predicted positive, true negative), where u is
+    the unprivileged group and p the rest. ``cnt`` turns a predicate
+    into a count: ``_cnt``, or a weighted mass. Counts a caller never
+    selects are pruned from the aggregate by the optimizer."""
+    g, ng = unpriv, ~unpriv
+    return [
+        cnt(g & pred_pos).alias("up"),
+        cnt(g).alias("u"),
+        cnt(ng & pred_pos).alias("pp"),
+        cnt(ng).alias("p"),
+        cnt(g & pred_pos & true_pos).alias("u_pp_tp"),
+        cnt(ng & pred_pos & true_pos).alias("p_pp_tp"),
+        cnt(g & ~pred_pos).alias("u_pn"),
+        cnt(g & pred_pos & ~true_pos).alias("u_pp_tn"),
+        cnt(ng & ~pred_pos).alias("p_pn"),
+        cnt(ng & pred_pos & ~true_pos).alias("p_pp_tn"),
+    ]
+
+
+def _rates() -> tuple[Column, Column]:
+    """(u_rate, p_rate): each group's predicted-positive rate over ``_counts``."""
+    return F.col("up") / F.col("u"), F.col("pp") / F.col("p")
+
+
+def _disp_imp(u_rate: Column, p_rate: Column) -> Column:
+    """M2 (utils.py:15-20): min(u/p, p/u); u==0 → u/p; p==0 defined as 0.0."""
+    return (
+        F.when(p_rate == 0, F.lit(0.0))
+        .when(u_rate == 0, u_rate / p_rate)
+        .otherwise(F.least(u_rate / p_rate, p_rate / u_rate))
+    )
+
+
+def _eq_odds(tpr_u: Column, tpr_p: Column, fpr_u: Column, fpr_p: Column) -> Column:
+    """M3 (utils.py:33-62): max(|tpr_u − tpr_p|, |fpr_u − fpr_p|)."""
+    return F.greatest(F.abs(tpr_u - tpr_p), F.abs(fpr_u - fpr_p))
+
+
+def _counted_eq_odds() -> Column:
+    """M3 over ``_counts``, in the as-implemented precision-style form:
+    the TPR denominator is |g ∧ ŷ=pos| (the ``up``/``pp`` count)."""
+    return _eq_odds(
+        _guard(F.col("u_pp_tp"), F.col("up")),
+        _guard(F.col("p_pp_tp"), F.col("pp")),
+        _guard(F.col("u_pp_tn"), F.col("u_pn")),
+        _guard(F.col("p_pp_tn"), F.col("p_pn")),
+    )
+
+
 def statistical_parity(
     df: DataFrame, unpriv: Column, pred_pos: Column, alias: str = "stat_par"
 ) -> DataFrame:
@@ -71,35 +133,17 @@ def statistical_parity(
 
     Single-row DataFrame; one aggregate pass (4 fused conditional counts).
     """
-    agg = df.agg(
-        _cnt(unpriv & pred_pos).alias("up"),
-        _cnt(unpriv).alias("u"),
-        _cnt(~unpriv & pred_pos).alias("pp"),
-        _cnt(~unpriv).alias("p"),
-    )
-    return agg.select(
-        ((F.col("up") / F.col("u")) - (F.col("pp") / F.col("p"))).alias(alias)
-    )
+    agg = df.agg(*_counts(unpriv, pred_pos, F.lit(True)))
+    u_rate, p_rate = _rates()
+    return agg.select((u_rate - p_rate).alias(alias))
 
 
 def disparate_impact(
     df: DataFrame, unpriv: Column, pred_pos: Column, alias: str = "disp_imp"
 ) -> DataFrame:
     """M2 (utils.py:15-20): min(u/p, p/u); u==0 → u/p; p==0 defined as 0.0."""
-    agg = df.agg(
-        _cnt(unpriv & pred_pos).alias("up"),
-        _cnt(unpriv).alias("u"),
-        _cnt(~unpriv & pred_pos).alias("pp"),
-        _cnt(~unpriv).alias("p"),
-    )
-    u_rate = F.col("up") / F.col("u")
-    p_rate = F.col("pp") / F.col("p")
-    di = (
-        F.when(p_rate == 0, F.lit(0.0))
-        .when(u_rate == 0, u_rate / p_rate)
-        .otherwise(F.least(u_rate / p_rate, p_rate / u_rate))
-    )
-    return agg.select(di.alias(alias))
+    agg = df.agg(*_counts(unpriv, pred_pos, F.lit(True)))
+    return agg.select(_disp_imp(*_rates()).alias(alias))
 
 
 def equalized_odds(
@@ -115,24 +159,8 @@ def equalized_odds(
     fpr_g  = |g ∧ ŷ=pos ∧ y≠pos| / |g ∧ ŷ≠pos|        (0 if denom 0)
     result = max(|tpr_u − tpr_p|, |fpr_u − fpr_p|)
     """
-    g, ng = unpriv, ~unpriv
-    agg = df.agg(
-        _cnt(g & pred_pos).alias("u_pp"),
-        _cnt(g & pred_pos & true_pos).alias("u_pp_tp"),
-        _cnt(ng & pred_pos).alias("p_pp"),
-        _cnt(ng & pred_pos & true_pos).alias("p_pp_tp"),
-        _cnt(g & ~pred_pos).alias("u_pn"),
-        _cnt(g & pred_pos & ~true_pos).alias("u_pp_tn"),
-        _cnt(ng & ~pred_pos).alias("p_pn"),
-        _cnt(ng & pred_pos & ~true_pos).alias("p_pp_tn"),
-    )
-    tpr_u = _guard(F.col("u_pp_tp"), F.col("u_pp"))
-    tpr_p = _guard(F.col("p_pp_tp"), F.col("p_pp"))
-    fpr_u = _guard(F.col("u_pp_tn"), F.col("u_pn"))
-    fpr_p = _guard(F.col("p_pp_tn"), F.col("p_pn"))
-    return agg.select(
-        F.greatest(F.abs(tpr_u - tpr_p), F.abs(fpr_u - fpr_p)).alias(alias)
-    )
+    agg = df.agg(*_counts(unpriv, pred_pos, true_pos))
+    return agg.select(_counted_eq_odds().alias(alias))
 
 
 def accuracy(
@@ -298,6 +326,35 @@ def average_odds_difference(
     )
 
 
+def _suite(
+    df: DataFrame,
+    unpriv: Column,
+    pred_pos: Column,
+    true_pos: Column,
+    y_true: str,
+    y_pred: str,
+    cnt: Callable[[Column], Column],
+    n: Column,
+    group_by: Sequence[str] = (),
+) -> DataFrame:
+    """(stat_par, disp_imp, eq_odds, acc) from ONE aggregate: the
+    ``_counts`` under ``cnt``, the matches under ``cnt`` and the total
+    ``n``, per ``group_by`` key."""
+    agg = df.groupBy(*group_by).agg(
+        *_counts(unpriv, pred_pos, true_pos, cnt),
+        cnt(F.col(y_true) == F.col(y_pred)).alias("n_match"),
+        n.alias("n"),
+    )
+    u_rate, p_rate = _rates()
+    return agg.select(
+        *group_by,
+        (u_rate - p_rate).alias("stat_par"),
+        _disp_imp(u_rate, p_rate).alias("disp_imp"),
+        _counted_eq_odds().alias("eq_odds"),
+        (F.col("n_match") / F.col("n")).alias("acc"),
+    )
+
+
 def fairness_suite(
     df: DataFrame,
     unpriv: Column,
@@ -314,40 +371,9 @@ def fairness_suite(
     (e.g. a CV fold) one row per key, the key columns first, each
     equal to the ungrouped suite on that key's rows.
     """
-    g, ng = unpriv, ~unpriv
-    match = F.when(F.col(y_true) == F.col(y_pred), F.lit(1)).otherwise(F.lit(0))
-    agg = df.groupBy(*group_by).agg(
-        _cnt(g & pred_pos).alias("up"),
-        _cnt(g).alias("u"),
-        _cnt(ng & pred_pos).alias("pp"),
-        _cnt(ng).alias("p"),
-        _cnt(g & pred_pos & true_pos).alias("u_pp_tp"),
-        _cnt(ng & pred_pos & true_pos).alias("p_pp_tp"),
-        _cnt(g & ~pred_pos).alias("u_pn"),
-        _cnt(g & pred_pos & ~true_pos).alias("u_pp_tn"),
-        _cnt(ng & ~pred_pos).alias("p_pn"),
-        _cnt(ng & pred_pos & ~true_pos).alias("p_pp_tn"),
-        F.sum(match).cast("double").alias("n_match"),
-        F.count(F.lit(1)).cast("double").alias("n"),
-    )
-    u_rate = F.col("up") / F.col("u")
-    p_rate = F.col("pp") / F.col("p")
-    di = (
-        F.when(p_rate == 0, F.lit(0.0))
-        .when(u_rate == 0, u_rate / p_rate)
-        .otherwise(F.least(u_rate / p_rate, p_rate / u_rate))
-    )
-    # |g ∧ ŷ=pos| is the same count as `up` — reuse it for the tpr denominator
-    tpr_u = _guard(F.col("u_pp_tp"), F.col("up"))
-    tpr_p = _guard(F.col("p_pp_tp"), F.col("pp"))
-    fpr_u = _guard(F.col("u_pp_tn"), F.col("u_pn"))
-    fpr_p = _guard(F.col("p_pp_tn"), F.col("p_pn"))
-    return agg.select(
-        *group_by,
-        (u_rate - p_rate).alias("stat_par"),
-        di.alias("disp_imp"),
-        F.greatest(F.abs(tpr_u - tpr_p), F.abs(fpr_u - fpr_p)).alias("eq_odds"),
-        (F.col("n_match") / F.col("n")).alias("acc"),
+    return _suite(
+        df, unpriv, pred_pos, true_pos, y_true, y_pred,
+        _cnt, F.count(F.lit(1)).cast("double"), group_by,
     )
 
 
@@ -401,24 +427,21 @@ def fairness_by_group(
     p, pp, p_pp_tp = d(tot_n) - u, d(tot_pp) - up, d(tot_pp_tp) - u_pp_tp
     u_rate = _guard(up, u)
     p_rate = _guard(pp, p)
-    di = (
-        F.when(p_rate == 0, F.lit(0.0))
-        .when(u_rate == 0, u_rate / p_rate)
-        .otherwise(F.least(u_rate / p_rate, p_rate / u_rate))
-    )
     # as-implemented M3 form: TPR denominator is the predicted-positive
     # count, FPR = (pp & ~tp) / pred-negative — all derivable from the
     # three census counts
-    tpr_u = _guard(u_pp_tp, up)
-    tpr_p = _guard(p_pp_tp, pp)
-    fpr_u = _guard(up - u_pp_tp, u - up)
-    fpr_p = _guard(pp - p_pp_tp, p - pp)
+    eq_odds = _eq_odds(
+        _guard(u_pp_tp, up),
+        _guard(p_pp_tp, pp),
+        _guard(up - u_pp_tp, u - up),
+        _guard(pp - p_pp_tp, p - pp),
+    )
     return census.select(
         *sensitive,
         F.col("n").cast("long").alias("n"),
         (u_rate - p_rate).alias("stat_par"),
-        di.alias("disp_imp"),
-        F.greatest(F.abs(tpr_u - tpr_p), F.abs(fpr_u - fpr_p)).alias("eq_odds"),
+        _disp_imp(u_rate, p_rate).alias("disp_imp"),
+        eq_odds.alias("eq_odds"),
     )
 
 
@@ -444,43 +467,13 @@ def weighted_fairness_suite(
     """
     from demv_spark.functions.compat import stable_sum
 
-    g, ng = unpriv, ~unpriv
     w = F.col(weight_col)
 
     def wcnt(pred: Column) -> Column:
         return stable_sum(F.when(pred, w).otherwise(F.lit(0.0)))
 
-    match = F.when(F.col(y_true) == F.col(y_pred), w).otherwise(F.lit(0.0))
-    agg = df.agg(
-        wcnt(g & pred_pos).alias("up"),
-        wcnt(g).alias("u"),
-        wcnt(ng & pred_pos).alias("pp"),
-        wcnt(ng).alias("p"),
-        wcnt(g & pred_pos & true_pos).alias("u_pp_tp"),
-        wcnt(ng & pred_pos & true_pos).alias("p_pp_tp"),
-        wcnt(g & ~pred_pos).alias("u_pn"),
-        wcnt(g & pred_pos & ~true_pos).alias("u_pp_tn"),
-        wcnt(ng & ~pred_pos).alias("p_pn"),
-        wcnt(ng & pred_pos & ~true_pos).alias("p_pp_tn"),
-        stable_sum(match).alias("n_match"),
-        stable_sum(w).alias("n"),
-    )
-    u_rate = F.col("up") / F.col("u")
-    p_rate = F.col("pp") / F.col("p")
-    di = (
-        F.when(p_rate == 0, F.lit(0.0))
-        .when(u_rate == 0, u_rate / p_rate)
-        .otherwise(F.least(u_rate / p_rate, p_rate / u_rate))
-    )
-    tpr_u = _guard(F.col("u_pp_tp"), F.col("up"))
-    tpr_p = _guard(F.col("p_pp_tp"), F.col("pp"))
-    fpr_u = _guard(F.col("u_pp_tn"), F.col("u_pn"))
-    fpr_p = _guard(F.col("p_pp_tn"), F.col("p_pn"))
-    return agg.select(
-        (u_rate - p_rate).alias("stat_par"),
-        di.alias("disp_imp"),
-        F.greatest(F.abs(tpr_u - tpr_p), F.abs(fpr_u - fpr_p)).alias("eq_odds"),
-        (F.col("n_match") / F.col("n")).alias("acc"),
+    return _suite(
+        df, unpriv, pred_pos, true_pos, y_true, y_pred, wcnt, stable_sum(w)
     )
 
 

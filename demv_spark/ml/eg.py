@@ -35,10 +35,49 @@ census alone — the driver-oracle query for the weight dynamics.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Sequence
+from collections.abc import Callable, Iterator, Sequence
+from contextlib import contextmanager
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+
+
+def _sy_census(
+    df: DataFrame, sensitive: str, label: str, caller: str
+) -> tuple[list[list[int]], tuple[float, float]]:
+    """The (s, y) census of binary ``sensitive`` and ``label`` in one
+    Spark aggregate: cell counts n[s][y] and each group's row share
+    p[s]."""
+    cells = {
+        (r["s"], r["y"]): r["n"]
+        for r in df.select(
+            F.col(sensitive).cast("int").alias("s"),
+            F.col(label).cast("int").alias("y"),
+        )
+        .groupBy("s", "y")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
+    n = [[cells.get((s, y), 0) for y in (0, 1)] for s in (0, 1)]
+    n0, n1 = sum(n[0]), sum(n[1])
+    if n0 == 0 or n1 == 0:
+        raise ValueError(f"{caller} needs both sensitive groups")
+    total = n0 + n1
+    return n, (n0 / total, n1 / total)
+
+
+def _constant_response(
+    n: list[list[int]], p: tuple[float, float], lam0: float, lam1: float
+) -> tuple[int, float, float]:
+    """Best response to the λ-weighted examples (w = 1 + λ_s/p_s)
+    among constant predictions: the c maximizing Σ w_i·1[y_i = c],
+    ties to 1 (mirrored as >=). Returns (c, loss0, loss1), each
+    group's zero-one loss under c."""
+    w0, w1 = 1 + lam0 / p[0], 1 + lam1 / p[1]
+    v1 = w0 * n[0][1] + w1 * n[1][1]
+    v0 = w0 * n[0][0] + w1 * n[1][0]
+    c = 1 if v1 >= v0 else 0
+    return c, n[0][1 - c] / sum(n[0]), n[1][1 - c] / sum(n[1])
 
 
 def eg_bounded_loss_dynamics(
@@ -60,43 +99,69 @@ def eg_bounded_loss_dynamics(
     Every operation is +, ·, /, max — mirrored textually in the
     DuckDB oracle so the doubles match bit-for-bit.
     """
-    cells = {
-        (r["s"], r["y"]): r["n"]
-        for r in df.select(
-            F.col(sensitive).cast("int").alias("s"),
-            F.col(label).cast("int").alias("y"),
-        )
-        .groupBy("s", "y")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    n00 = cells.get((0, 0), 0)
-    n01 = cells.get((0, 1), 0)
-    n10 = cells.get((1, 0), 0)
-    n11 = cells.get((1, 1), 0)
-    n0, n1 = n00 + n01, n10 + n11
-    if n0 == 0 or n1 == 0:
-        raise ValueError("eg_bounded_loss_dynamics needs both sensitive groups")
-    total = n0 + n1
-    p0 = n0 / total
-    p1 = n1 / total
-
+    n, p = _sy_census(df, sensitive, label, "eg_bounded_loss_dynamics")
     lam0 = lam1 = 1.0
     rows = []
     for t in range(iters):
-        # best response to the λ-weighted examples: the constant c
-        # maximizing Σ w_i·1[y_i = c]; ties go to 1 (mirrored as >=)
-        v1 = (1 + lam0 / p0) * n01 + (1 + lam1 / p1) * n11
-        v0 = (1 + lam0 / p0) * n00 + (1 + lam1 / p1) * n10
-        c = 1 if v1 >= v0 else 0
-        loss0 = (n00 if c == 1 else n01) / n0
-        loss1 = (n10 if c == 1 else n11) / n1
+        c, loss0, loss1 = _constant_response(n, p, lam0, lam1)
         rows.append((t, c, loss0, loss1, lam0, lam1))
         lam0 = lam0 * max(0.0, 1 + eta * (loss0 - bound))
         lam1 = lam1 * max(0.0, 1 + eta * (loss1 - bound))
     return df.sparkSession.createDataFrame(
         rows, "t int, c int, loss0 double, loss1 double, lam0 double, lam1 double"
     )
+
+
+@contextmanager
+def _weighted_fits(
+    df: DataFrame,
+    feature_cols: Sequence[str],
+    sensitive: Sequence[str],
+    label: str,
+    classifier_factory: Callable[[], object],
+) -> Iterator[tuple[dict, Callable[[dict], tuple]]]:
+    """The best-response step both reductions share. Yields (probs,
+    fit): ``probs`` maps each sensitive-value tuple g to its row share
+    p_g, and ``fit(lams)`` fits the classifier pipeline on weights
+    w = 1 + λ_g/p_g (a broadcast-joined λ map feeding MLlib
+    ``weightCol``, no resampling) and returns (model, {g: (wrong,
+    n)}), its per-group census over the training rows. Every fit and
+    census reads an owned copy of ``df``, released on every exit
+    path, so the release cannot evict a table the caller cached."""
+    from demv_spark.ml.evaluation import _owned_checkpoint, _pipeline
+
+    df, release = _owned_checkpoint(df)
+    try:
+        census = df.groupBy(*sensitive).agg(F.count(F.lit(1)).alias("n")).collect()
+        total = sum(r["n"] for r in census)
+        probs = {tuple(r[k] for k in sensitive): r["n"] / total for r in census}
+
+        def fit(lams: dict) -> tuple:
+            wmap = df.sparkSession.createDataFrame(
+                [
+                    {**dict(zip(sensitive, g)), "__eg_w": 1 + lams[g] / p}
+                    for g, p in probs.items()
+                ]
+            )
+            clf = classifier_factory()
+            if hasattr(clf, "setWeightCol"):
+                clf = clf.setWeightCol("__eg_w")
+            model = _pipeline(feature_cols, label, clf).fit(
+                df.join(F.broadcast(wmap), list(sensitive))
+            )
+            wrong = (F.col("prediction") != F.col(label)).cast("int")
+            stats = {
+                tuple(r[k] for k in sensitive): (r["wrong"], r["n"])
+                for r in model.transform(df)
+                .groupBy(*sensitive)
+                .agg(F.sum(wrong).alias("wrong"), F.count(F.lit(1)).alias("n"))
+                .collect()
+            }
+            return model, stats
+
+        yield probs, fit
+    finally:
+        release()
 
 
 class ExponentiatedGradientBGL:
@@ -138,65 +203,22 @@ class ExponentiatedGradientBGL:
         self.models_: list = []
         self.trajectory_: list[dict] = []
 
-    def _weight_map(self, spark, groups: list[tuple], lams: dict, probs: dict):
-        rows = [
-            {
-                **{k: g[i] for i, k in enumerate(self.sensitive)},
-                "__eg_w": 1 + lams[g] / probs[g],
-            }
-            for g in groups
-        ]
-        return F.broadcast(spark.createDataFrame(rows))
-
     def fit(self, df: DataFrame, feature_cols: Sequence[str]) -> "ExponentiatedGradientBGL":
-        from demv_spark.ml.evaluation import _owned_checkpoint, _pipeline
-
-        # every fit and loss census reads this fit's own copy, so
-        # releasing it cannot evict a table the caller cached
-        df, release = _owned_checkpoint(df)
-        census = (
-            df.groupBy(*self.sensitive).agg(F.count(F.lit(1)).alias("n")).collect()
-        )
-        total = sum(r["n"] for r in census)
-        groups = [tuple(r[k] for k in self.sensitive) for r in census]
-        probs = {g: r["n"] / total for g, r in zip(groups, census)}
-        lams = {g: 1.0 for g in groups}
-
         self.models_ = []
         self.trajectory_ = []
-        for t in range(self.iters):
-            wmap = self._weight_map(df.sparkSession, groups, lams, probs)
-            weighted = df.join(wmap, self.sensitive)
-            clf = self.classifier_factory()
-            if hasattr(clf, "setWeightCol"):
-                clf = clf.setWeightCol("__eg_w")
-            model = _pipeline(feature_cols, self.label, clf).fit(weighted)
-            self.models_.append(model)
-
-            pred = model.transform(df)
-            losses = {
-                tuple(r[k] for k in self.sensitive): r["loss"]
-                for r in pred.groupBy(*self.sensitive)
-                .agg(
-                    (
-                        F.sum(
-                            (F.col("prediction") != F.col(self.label)).cast("int")
-                        )
-                        / F.count(F.lit(1))
-                    ).alias("loss")
-                )
-                .collect()
-            }
-            self.trajectory_.append(
-                {"t": t, "lams": dict(lams), "losses": dict(losses)}
-            )
-            for g in groups:
-                lams[g] = lams[g] * max(
-                    0.0, 1 + self.eta * (losses[g] - self.bound)
-                )
-        # fits and loss censuses are all materialized above; the
-        # fitted models never read df again
-        release()
+        with _weighted_fits(
+            df, feature_cols, self.sensitive, self.label, self.classifier_factory
+        ) as (probs, best_response):
+            lams = {g: 1.0 for g in probs}
+            for t in range(self.iters):
+                model, stats = best_response(lams)
+                self.models_.append(model)
+                losses = {g: w / n for g, (w, n) in stats.items()}
+                self.trajectory_.append({"t": t, "lams": dict(lams), "losses": losses})
+                lams = {
+                    g: lam * max(0.0, 1 + self.eta * (losses[g] - self.bound))
+                    for g, lam in lams.items()
+                }
         return self
 
     def predict(self, df: DataFrame, out: str = "prediction") -> DataFrame:
@@ -245,37 +267,15 @@ def grid_bounded_loss_census(
     Every op is +, ·, /, max and comparisons — mirrored textually in
     the DuckDB oracle (a generate_series cross grid + window argmin).
     """
-    cells = {
-        (r["s"], r["y"]): r["n"]
-        for r in df.select(
-            F.col(sensitive).cast("int").alias("s"),
-            F.col(label).cast("int").alias("y"),
-        )
-        .groupBy("s", "y")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    n00 = cells.get((0, 0), 0)
-    n01 = cells.get((0, 1), 0)
-    n10 = cells.get((1, 0), 0)
-    n11 = cells.get((1, 1), 0)
-    n0, n1 = n00 + n01, n10 + n11
-    if n0 == 0 or n1 == 0:
-        raise ValueError("grid_bounded_loss_census needs both sensitive groups")
-    total = n0 + n1
-    p0, p1 = n0 / total, n1 / total
-
+    n, p = _sy_census(df, sensitive, label, "grid_bounded_loss_census")
+    total = sum(n[0]) + sum(n[1])
     step = lambda_max / (grid_size - 1)
     rows = []
     for g in range(grid_size * grid_size):
         i0, i1 = g // grid_size, g % grid_size
         lam0, lam1 = i0 * step, i1 * step
-        v1 = (1 + lam0 / p0) * n01 + (1 + lam1 / p1) * n11
-        v0 = (1 + lam0 / p0) * n00 + (1 + lam1 / p1) * n10
-        c = 1 if v1 >= v0 else 0
-        loss0 = (n00 if c == 1 else n01) / n0
-        loss1 = (n10 if c == 1 else n11) / n1
-        err = ((n00 + n10) if c == 1 else (n01 + n11)) / total
+        c, loss0, loss1 = _constant_response(n, p, lam0, lam1)
+        err = (n[0][1 - c] + n[1][1 - c]) / total
         feasible = max(loss0, loss1) <= bound
         rows.append((g, lam0, lam1, c, loss0, loss1, err, feasible))
 
@@ -346,52 +346,23 @@ class GridSearchBGL:
         return grids
 
     def fit(self, df: DataFrame, feature_cols: Sequence[str]) -> "GridSearchBGL":
-        from demv_spark.ml.evaluation import _owned_checkpoint, _pipeline
-
-        df, release = _owned_checkpoint(df)  # owned copy, as in EG
-        census = (
-            df.groupBy(*self.sensitive).agg(F.count(F.lit(1)).alias("n")).collect()
-        )
-        total = sum(r["n"] for r in census)
-        groups = [tuple(r[k] for k in self.sensitive) for r in census]
-        probs = {g: r["n"] / total for g, r in zip(groups, census)}
-
         self.models_ = []
         self.grid_ = []
-        for idx, lams in enumerate(self._lambda_grid(groups)):
-            wrows = [
-                {
-                    **{k: g[i] for i, k in enumerate(self.sensitive)},
-                    "__eg_w": 1 + lams[g] / probs[g],
-                }
-                for g in groups
-            ]
-            wmap = F.broadcast(df.sparkSession.createDataFrame(wrows))
-            clf = self.classifier_factory()
-            if hasattr(clf, "setWeightCol"):
-                clf = clf.setWeightCol("__eg_w")
-            model = _pipeline(feature_cols, self.label, clf).fit(
-                df.join(wmap, self.sensitive)
-            )
-            self.models_.append(model)
-
-            pred = model.transform(df)
-            stats = {
-                tuple(r[k] for k in self.sensitive): (r["wrong"], r["n"])
-                for r in pred.groupBy(*self.sensitive)
-                .agg(
-                    F.sum(
-                        (F.col("prediction") != F.col(self.label)).cast("int")
-                    ).alias("wrong"),
-                    F.count(F.lit(1)).alias("n"),
+        with _weighted_fits(
+            df, feature_cols, self.sensitive, self.label, self.classifier_factory
+        ) as (probs, best_response):
+            for idx, lams in enumerate(self._lambda_grid(list(probs))):
+                model, stats = best_response(lams)
+                self.models_.append(model)
+                self.grid_.append(
+                    {
+                        "idx": idx,
+                        "lams": dict(lams),
+                        "losses": {g: w / n for g, (w, n) in stats.items()},
+                        "err": sum(w for w, _ in stats.values())
+                        / sum(n for _, n in stats.values()),
+                    }
                 )
-                .collect()
-            }
-            losses = {g: w / n for g, (w, n) in stats.items()}
-            err = sum(w for w, _ in stats.values()) / total
-            self.grid_.append(
-                {"idx": idx, "lams": dict(lams), "losses": losses, "err": err}
-            )
 
         feasible = [
             r for r in self.grid_ if max(r["losses"].values()) <= self.bound
@@ -403,8 +374,6 @@ class GridSearchBGL:
             else (lambda r: (max(r["losses"].values()), r["idx"]))
         )
         self.best_idx_ = min(pool, key=key)["idx"]
-        # grid fits and censuses fully collected above
-        release()
         return self
 
     def predict(self, df: DataFrame, out: str = "prediction") -> DataFrame:

@@ -10,14 +10,19 @@ metrics per fold (utils.py:136-158, 242-261). Here:
   Catalyst prunes;
 - classifiers are MLlib estimators (distributed fit/predict) behind
   the same four names the reference uses (generatemetrics.py:172-184);
-- ``cross_val`` is the one fold loop: the fold-assigned table is
-  cached for the call; each fold's debiased training split is
-  materialised once (eager localCheckpoint) so the scaler summary and
-  the classifier's passes do not re-run the debias; the model is a
-  fit→predict hook (MLlib pipeline by default, the EG/GridSearch
-  reductions from cli); all k folds are scored in ONE grouped pass
-  per metric call (fairness_suite / zero_one_loss_diff grouped by
-  fold), and every cache and checkpoint is released when it returns;
+- ``_fold_splits`` is the one fold loop: the fold-assigned table is
+  cached for the call, each fold's debiased training split is
+  materialised once through ``_owned_checkpoint`` (eager
+  localCheckpoint) so the scaler summary and the classifier's passes
+  do not re-run the debias, and all of it is released when the loop
+  exits;
+- ``cross_val`` fits a fit→predict hook per split (the MLlib pipeline
+  by default, the EG/GridSearch reductions from cli) and scores all k
+  folds in ONE grouped pass per metric call (fairness_suite /
+  zero_one_loss_diff grouped by fold);
+- ``out_of_fold_predictions`` runs the same loop and returns its
+  union materialised (eager localCheckpoint), so the result reads no
+  fold cache once the call returns;
 - the final report is mean ± std over the tiny per-fold table in one
   aggregate (A5/E10), with explode for list-valued cells (E11).
 
@@ -26,15 +31,16 @@ binary-only → multiclass falls back to RandomForest; LinearSVC gets
 OneVsRest for multiclass; MLP needs explicit layer sizes. Metric
 parity with the reference is tolerance-based, never bitwise.
 
-The fairlearn ExponentiatedGradient reduction (E8) is implemented
-Spark-natively in ml/eg.py (weightCol best responses + multiplicative
-multiplier updates over the bounded-group-loss constraint); GridSearch
-remains out of scope (a λ-grid sweep of the same machinery).
+The fairlearn reductions (E8), ExponentiatedGradient and GridSearch
+over a bounded-group-loss constraint, are implemented Spark-natively
+in ml/eg.py: weightCol best responses to a per-group λ, updated
+multiplicatively (EG) or swept over a fixed grid (GridSearch).
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Sequence
+from collections.abc import Callable, Iterator, Sequence
+from contextlib import contextmanager
 from functools import reduce
 
 import pyspark.sql.functions as F
@@ -43,28 +49,19 @@ from pyspark.sql import DataFrame, Window
 from demv_spark.functions import metrics as M
 
 
-_warned_fold_default = False
-
-
 def assign_folds(
     df: DataFrame,
     k: int = 10,
     seed: int = 2,
     fold_col: str = "fold",
-    exact: bool | None = None,
+    exact: bool = False,
     portable_key: Sequence[str] | None = None,
 ) -> DataFrame:
     """Seeded fold-assignment column (E4, utils.py:137,145-148).
 
-    exact=False (the DEFAULT): pmod(hash, k) — shuffle-free, scales
-    to any size, fold sizes only approximately equal. The default is
-    the 100 TB plan (VERDICT r5: a default must not be the
-    scale-killer); the reference-parity regimes below are opt-in.
-    VERSIONING NOTE: the default FLIPPED from exact=True in round 6 —
-    callers relying on the old default silently got hash folds
-    instead of sklearn-KFold-equal sizes, so leaving ``exact``
-    unspecified now emits a one-time warning (pass it explicitly to
-    silence).
+    exact=False (the default): pmod(hash, k) — shuffle-free, scales
+    to any size, fold sizes only approximately equal. The
+    reference-parity regimes below are opt-in.
 
     exact=True: ntile(k) over rand(seed) — fold sizes identical to
     sklearn KFold (first n % k folds take the extra row). GLOBAL
@@ -77,20 +74,6 @@ def assign_folds(
     oracle-checked. SQL twin per row:
     ``CAST(concat('0x', substr(md5(concat_ws('|', key..., 'seed')),
     1, 15)) AS BIGINT) % k``."""
-    if exact is None:
-        global _warned_fold_default
-        if not _warned_fold_default and portable_key is None:
-            import warnings
-
-            warnings.warn(
-                "assign_folds: the default changed to exact=False "
-                "(shuffle-free hash folds) in round 6; pass "
-                "exact=True for sklearn-KFold-equal fold sizes or "
-                "exact=False to silence this one-time warning",
-                stacklevel=2,
-            )
-            _warned_fold_default = True
-        exact = False
     if portable_key is not None:
         from demv_spark.functions.compat import portable_hash
 
@@ -206,6 +189,38 @@ def _owned_checkpoint(df: DataFrame) -> tuple[DataFrame, Callable[[], None]]:
     return cp, lambda: rdd.unpersist(False)
 
 
+@contextmanager
+def _fold_splits(
+    df: DataFrame,
+    k: int,
+    seed: int,
+    fold_col: str = "fold",
+    debias: Callable[[DataFrame], DataFrame] | None = None,
+) -> Iterator[Iterator[tuple[DataFrame, DataFrame]]]:
+    """The k-fold loop: yields the (train, test) split of each hash
+    fold of ``df``, fold 0 first. The fold table is cached for the loop; with
+    ``debias``, each training split is debiased and materialised once
+    through ``_owned_checkpoint``. On exit the fold cache and every
+    split are released, so nothing lazy may still read them."""
+    folded = assign_folds(df, k, seed, fold_col).cache()
+    releases = []
+
+    def splits():
+        for fold in range(k):
+            train = folded.filter(F.col(fold_col) != fold)
+            if debias is not None:
+                train, release = _owned_checkpoint(debias(train))
+                releases.append(release)
+            yield train, folded.filter(F.col(fold_col) == fold)
+
+    try:
+        yield splits()
+    finally:
+        folded.unpersist()
+        for release in releases:
+            release()
+
+
 def out_of_fold_predictions(
     df: DataFrame,
     feature_cols: Sequence[str],
@@ -224,31 +239,22 @@ def out_of_fold_predictions(
     positional writeback at confusionmatrix.py:203 is a pandas-ism).
 
     Returns df columns + `prediction` (double) + `y_true` (the label
-    copied, matching the reference's column convention)."""
-    # eager localCheckpoint, not cache (round 13): the returned union
-    # references the folded table lazily, so a bare unpersist would
-    # re-derive it per fold on the caller's first action, while the
-    # old .cache() held a CacheManager entry for the session lifetime
-    # (every later query paid a canonicalized-plan comparison on it)
-    folded = assign_folds(df, k, seed, fold_col, exact=False).localCheckpoint(
-        eager=True
-    )
+    copied, matching the reference's column convention), materialised
+    (eager localCheckpoint) so the fold caches release with the call."""
     pipe = _pipeline(feature_cols, label_col, classifier)
-    parts = []
-    for fold in range(k):
-        train = folded.filter(F.col(fold_col) != fold)
-        test = folded.filter(F.col(fold_col) == fold)
-        if debias is not None:
-            train = debias(train)
-        model = pipe.fit(train)
-        pred = model.transform(test).drop(
-            "__raw_features", "__features", "rawPrediction", "probability"
+    with _fold_splits(df, k, seed, fold_col, debias) as splits:
+        pred = reduce(
+            DataFrame.unionByName,
+            [
+                pipe.fit(train).transform(test).drop(
+                    "__raw_features", "__features", "rawPrediction", "probability"
+                )
+                for train, test in splits
+            ],
         )
-        parts.append(pred)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.withColumn("y_true", F.col(label_col))
+        return pred.withColumn("y_true", F.col(label_col)).localCheckpoint(
+            eager=True
+        )
 
 
 def majority_baseline_oof(
@@ -330,20 +336,12 @@ def cross_val(
         def fit(train):
             return pipe.fit(train).transform
 
-    folded = assign_folds(df, k, seed, exact=False).cache()
-    releases = []
-    try:
-        preds = []
-        for fold in range(k):
-            train = folded.filter(F.col("fold") != fold)
-            test = folded.filter(F.col("fold") == fold)
-            if debias is not None:
-                # materialised once: every pass of the fit over the
-                # split reads it instead of re-running the debias
-                train, release = _owned_checkpoint(debias(train))
-                releases.append(release)
-            preds.append(fit(train)(test))
-        pred = reduce(DataFrame.unionByName, preds)
+    with _fold_splits(df, k, seed, debias=debias) as splits:
+        pred = reduce(
+            DataFrame.unionByName, [fit(train)(test) for train, test in splits]
+        )
+        # every fold's metrics are collected inside the loop: nothing
+        # lazy reads its caches once it exits
         suite = M.fairness_suite(
             pred,
             unpriv,
@@ -356,12 +354,6 @@ def cross_val(
         loss = M.zero_one_loss_diff(
             pred, label_col, "prediction", sensitive, group_by=["fold"]
         ).collect()
-    finally:
-        # every fold's metrics are collected above — nothing lazy
-        # escapes, so the fold cache and the splits release with the call
-        folded.unpersist()
-        for release in releases:
-            release()
     suite = {r["fold"]: r.asDict() for r in suite}
     loss = {r["fold"]: r.asDict() for r in loss}
     # a fold with no test rows keeps its row, with null metrics
@@ -400,10 +392,7 @@ def repeated_demv_eval(
             ).fit_transform(t),
         )
         reps.append(per_fold.withColumn("rep", F.lit(rep)))
-    out = reps[0]
-    for p in reps[1:]:
-        out = out.unionByName(p)
-    return out
+    return reduce(DataFrame.unionByName, reps)
 
 
 def sweep_stops(
@@ -433,9 +422,7 @@ def sweep_stops(
             ).fit_transform(t),
         )
         parts.append(per_fold.withColumn("stop", F.lit(stop)))
-    swept = parts[0]
-    for p in parts[1:]:
-        swept = swept.unionByName(p)
+    swept = reduce(DataFrame.unionByName, parts)
     metric_cols = [c for c in swept.columns if c not in ("fold", "stop")]
     return swept.groupBy("stop").agg(
         *[F.avg(c).alias(c) for c in metric_cols]

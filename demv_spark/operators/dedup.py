@@ -1249,20 +1249,14 @@ def duplicate_clusters(
     # (they are RDD-level, CacheManager-free, normally freed only when
     # the ContextCleaner notices the RDD is garbage — i.e. on some
     # later JVM GC). Measured: every superseded round's edge blocks
-    # stayed pinned for the call's lifetime. Each round's newly
-    # pinned RDD ids are tracked through the JVM persistent-RDD map
-    # and released deterministically once the NEXT round has
-    # materialized (its checkpoint no longer reads them); only the
-    # final round — the returned result — stays, ContextCleaner-
-    # managed. Operators run their rounds serially, so the
-    # before/after id delta is race-free within a call.
-    jsc = pairs.sparkSession.sparkContext._jsc
-
-    def _pinned_ids():
-        return set(jsc.getPersistentRDDs().keySet().toArray())
-
+    # stayed pinned for the call's lifetime. Each round's own
+    # checkpoint RDD (the LogicalRDD under the checkpointed frame, as
+    # in evaluation._owned_checkpoint) is released deterministically
+    # once the NEXT round has materialized (its checkpoint no longer
+    # reads it); only the final round — the returned result — stays,
+    # ContextCleaner-managed. No other RDD is touched, so concurrent
+    # callers' pinned RDDs survive.
     def _ckpt_with_checksum(e: DataFrame):
-        before = _pinned_ids()
         ck = e.localCheckpoint(eager=False)
         row = ck.agg(
             F.count(F.lit(1)).alias("n"),
@@ -1270,25 +1264,18 @@ def duplicate_clusters(
                 F.expr("bit_xor(xxhash64(src, dst))"), F.lit(0).cast("long")
             ).alias("h"),
         ).collect()[0]
-        return ck, (row["n"], row["h"]), _pinned_ids() - before
+        return ck, (row["n"], row["h"]), ck._jdf.queryExecution().logical().rdd()
 
-    def _release(ids):
-        m = jsc.getPersistentRDDs()
-        for i in ids:
-            r = m.get(i)
-            if r is not None:
-                r.unpersist(False)
-
-    edges, prev, eids = _ckpt_with_checksum(
+    edges, prev, rdd = _ckpt_with_checksum(
         _canonical_edges(
             pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         )
     )
 
     for _ in range(max_iter):
-        nxt, cur, nids = _ckpt_with_checksum(_small_star(_large_star(edges)))
-        _release(eids)
-        edges, eids = nxt, nids
+        nxt, cur, nrdd = _ckpt_with_checksum(_small_star(_large_star(edges)))
+        rdd.unpersist(False)
+        edges, rdd = nxt, nrdd
         if cur == prev:
             break
         prev = cur

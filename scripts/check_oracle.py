@@ -6,11 +6,12 @@ row count, sorted column names, and an order-insensitive value hash
 (exact — floats must match bit-for-bit, which the engine guarantees
 via integer-count ratios and decimal-stable sums).
 
-Usage: python scripts/check_oracle.py [query ...] [--sf DIR]
+Usage: python scripts/check_oracle.py [query ...] [--sf DIR | --sf=DIR]
 """
 
 from __future__ import annotations
 
+import argparse
 import math
 import os
 import struct
@@ -50,11 +51,11 @@ def frame_signature(cols, rows):
 
 
 def main():
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    sf = "/root/testdata/sf0.01"
-    for a in sys.argv[1:]:
-        if a.startswith("--sf="):
-            sf = a.split("=", 1)[1]
+    parser = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    parser.add_argument("queries", nargs="*", help="query names (default: all)")
+    parser.add_argument("--sf", default="/root/testdata/sf0.01", help="table directory")
+    opts = parser.parse_intermixed_args()
+    args, sf = opts.queries, opts.sf
 
     spark = get_spark(
         "oracle-check",

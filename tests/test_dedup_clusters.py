@@ -478,3 +478,34 @@ def test_decontaminate_near_flags_paraphrases_not_strangers(spark):
     # threshold filters
     strict = decontaminate_near(corpus, bench, shingle_n=3, threshold=0.999)
     assert {r.doc_id for r in strict.collect()} == {1}
+
+
+def test_cc_rounds_release_only_their_own_rdds(spark, monkeypatch):
+    """Each CC round frees its own checkpoint RDD once the next round
+    has materialized. An RDD that another caller pins while a round
+    runs is not the call's to free: it must still be pinned after the
+    call returns, and only the final round's checkpoint stays."""
+    jsc = spark.sparkContext._jsc
+    frame_cls = type(spark.range(1))
+    orig = frame_cls.localCheckpoint
+    foreign = []
+
+    def checkpoint_and_pin_foreign(self, *a, **kw):
+        out = orig(self, *a, **kw)
+        if not foreign:
+            rdd = spark.sparkContext.parallelize([1, 2, 3]).cache()
+            rdd.count()
+            foreign.append(rdd)
+        return out
+
+    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    monkeypatch.setattr(frame_cls, "localCheckpoint", checkpoint_and_pin_foreign)
+    pairs = [(i, i + 1) for i in range(12)]
+    assert _clusters(spark, pairs) == _union_find(pairs)
+    monkeypatch.undo()
+    try:
+        pinned = set(jsc.getPersistentRDDs().keySet().toArray())
+        assert foreign[0].id() in pinned, "a round released a foreign RDD"
+        assert len(pinned - before - {foreign[0].id()}) <= 1
+    finally:
+        foreign[0].unpersist()

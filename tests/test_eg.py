@@ -90,6 +90,29 @@ def test_reduction_fit_keeps_the_callers_cache(spark):
     data.unpersist()
 
 
+@pytest.mark.parametrize("reduction", ["eg", "grid"])
+def test_reduction_fit_releases_its_copy_when_the_fit_raises(spark, reduction):
+    """The owned training copy is released on every exit path: a
+    classifier that fails leaves no RDD of the fit pinned."""
+    from demv_spark.ml.eg import GridSearchBGL
+
+    data = spark.range(60).select(
+        (F.col("id") % 7).cast("double").alias("f1"),
+        (F.col("id") % 2).cast("int").alias("s0"),
+        (F.col("id") % 3 == 0).cast("int").alias("y"),
+    )
+
+    def factory():
+        raise RuntimeError("classifier unavailable")
+
+    cls = ExponentiatedGradientBGL if reduction == "eg" else GridSearchBGL
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    with pytest.raises(RuntimeError, match="classifier unavailable"):
+        cls(factory, ["s0"], "y").fit(data, ["f1"])
+    assert set(jsc.getPersistentRDDs().keySet().toArray()) == before
+
+
 @pytest.mark.slow
 def test_eg_bgl_matches_reference_behavior(biased):
     """Reference parity (generatemetrics.py:101-113 via BASELINE.md):

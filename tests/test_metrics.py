@@ -115,6 +115,49 @@ def test_fairness_suite_matches_individual(df):
     assert suite["acc"] == pytest.approx(acc, abs=1e-12)
 
 
+def test_suite_kernel_identities_bit_exact(spark):
+    """One count kernel behind every two-group metric: with all
+    weights 1.0 the weighted suite equals fairness_suite row for row,
+    and M1-M3 equal the matching suite columns, as float bits. Case 1
+    has no privileged predicted positive (p_rate == 0), case 2 none in
+    the unprivileged group (u_rate == 0)."""
+    import struct
+
+    cases = {
+        0: ROWS,
+        1: [(1, 1, 1), (1, 0, 0), (1, 1, 0), (0, 0, 1), (0, 0, 0)],
+        2: [(1, 0, 1), (1, 0, 0), (0, 1, 1), (0, 1, 0), (0, 0, 0)],
+    }
+    table = spark.createDataFrame(
+        [(c, *r) for c, rows in cases.items() for r in rows],
+        ["case", "sens", "y_pred", "y_true"],
+    ).withColumn("w", F.lit(1.0))
+    args = (_unpriv(), _pred_pos(), _true_pos(), "y_true", "y_pred")
+    suite = {
+        r["case"]: r
+        for r in M.fairness_suite(table, *args, group_by=["case"]).collect()
+    }
+    assert suite[1]["stat_par"] == 2 / 3 and suite[1]["disp_imp"] == 0.0
+    assert suite[2]["stat_par"] == -2 / 3 and suite[2]["disp_imp"] == 0.0
+
+    def bits(x):
+        return struct.pack(">d", x)
+
+    for case in cases:
+        part = table.filter(F.col("case") == case)
+        want = suite[case]
+        got = M.weighted_fairness_suite(part, *args, "w").collect()[0]
+        for col in ("stat_par", "disp_imp", "eq_odds", "acc"):
+            assert bits(got[col]) == bits(want[col]), (case, col)
+        single = {
+            "stat_par": M.statistical_parity(part, _unpriv(), _pred_pos()),
+            "disp_imp": M.disparate_impact(part, _unpriv(), _pred_pos()),
+            "eq_odds": M.equalized_odds(part, _unpriv(), _pred_pos(), _true_pos()),
+        }
+        for col, df in single.items():
+            assert bits(df.collect()[0][0]) == bits(want[col]), (case, col)
+
+
 def test_grouped_suite_and_loss_equal_per_group_filters(spark):
     """group_by (the CV fold loop scores all folds in one pass): each
     key's row equals the ungrouped call on that key's rows, exactly."""

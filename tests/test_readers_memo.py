@@ -104,6 +104,13 @@ def test_conf_bytes_parses_suffixes(spark):
             spark.conf.set(key, raw)
             assert readers._conf_bytes(spark, key, -1) == want, raw
 
+        # a fractional size never reaches the parser: the set itself
+        # is rejected
+        from pyspark.errors import IllegalArgumentException
+
+        with pytest.raises(IllegalArgumentException, match="INVALID_CONF_VALUE"):
+            spark.conf.set(key, "1.5g")
+
         # malformed values can't pass spark.conf.set validation; pin
         # the parser's fallback through a stub session instead
         class _Stub:
