@@ -40,6 +40,15 @@ def _feature_cols(df: DataFrame, label: str) -> list[str]:
     ]
 
 
+def _class_count(df: DataFrame, label: str, classifier: str) -> int | None:
+    """The label's class count for the classifiers whose form depends
+    on it (``gradient``, ``svc``: binary vs multiclass), else None —
+    counting costs Spark jobs no other classifier reads."""
+    if classifier in ("gradient", "svc"):
+        return df.select(label).distinct().count()
+    return None
+
+
 def run_metrics(
     df: DataFrame,
     method: str,
@@ -58,7 +67,7 @@ def run_metrics(
     sensitive = list(unpriv_group)
     unpriv = group_condition(unpriv_group)
     features = _feature_cols(df, label)
-    n_classes = df.select(label).distinct().count()
+    n_classes = _class_count(df, label, classifier)
 
     def clf():
         return E.build_classifier(classifier, label, "__features", n_classes, seed)
@@ -120,7 +129,7 @@ def generate_cm(
 
     sensitive = list(unpriv_group)
     features = _feature_cols(df, label)
-    n_classes = df.select(label).distinct().count()
+    n_classes = _class_count(df, label, classifier)
     clf = E.build_classifier(classifier, label, "__features", n_classes, seed)
 
     base = df

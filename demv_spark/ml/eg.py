@@ -40,6 +40,9 @@ from contextlib import contextmanager
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+from pyspark.sql.types import DoubleType, StructField, StructType
+
+from demv_spark.session import local_table
 
 
 def _sy_census(
@@ -107,8 +110,10 @@ def eg_bounded_loss_dynamics(
         rows.append((t, c, loss0, loss1, lam0, lam1))
         lam0 = lam0 * max(0.0, 1 + eta * (loss0 - bound))
         lam1 = lam1 * max(0.0, 1 + eta * (loss1 - bound))
-    return df.sparkSession.createDataFrame(
-        rows, "t int, c int, loss0 double, loss1 double, lam0 double, lam1 double"
+    return local_table(
+        df.sparkSession,
+        rows,
+        "t int, c int, loss0 double, loss1 double, lam0 double, lam1 double",
     )
 
 
@@ -123,11 +128,12 @@ def _weighted_fits(
     """The best-response step both reductions share. Yields (probs,
     fit): ``probs`` maps each sensitive-value tuple g to its row share
     p_g, and ``fit(lams)`` fits the classifier pipeline on weights
-    w = 1 + λ_g/p_g (a broadcast-joined λ map feeding MLlib
-    ``weightCol``, no resampling) and returns (model, {g: (wrong,
-    n)}), its per-group census over the training rows. Every fit and
-    census reads an owned copy of ``df``, released on every exit
-    path, so the release cannot evict a table the caller cached."""
+    w = 1 + λ_g/p_g (a broadcast-joined λ map, built on the driver as
+    an Arrow local relation, feeding MLlib ``weightCol``, no
+    resampling) and returns (model, {g: (wrong, n)}), its per-group
+    census over the training rows. Every fit and census reads an
+    owned copy of ``df``, released on every exit path, so the release
+    cannot evict a table the caller cached."""
     from demv_spark.ml.evaluation import _owned_checkpoint, _pipeline
 
     df, release = _owned_checkpoint(df)
@@ -135,13 +141,16 @@ def _weighted_fits(
         census = df.groupBy(*sensitive).agg(F.count(F.lit(1)).alias("n")).collect()
         total = sum(r["n"] for r in census)
         probs = {tuple(r[k] for k in sensitive): r["n"] / total for r in census}
+        wmap_schema = StructType(
+            [StructField(k, df.schema[k].dataType) for k in sensitive]
+            + [StructField("__eg_w", DoubleType())]
+        )
 
         def fit(lams: dict) -> tuple:
-            wmap = df.sparkSession.createDataFrame(
-                [
-                    {**dict(zip(sensitive, g)), "__eg_w": 1 + lams[g] / p}
-                    for g, p in probs.items()
-                ]
+            wmap = local_table(
+                df.sparkSession,
+                [(*g, 1 + lams[g] / p) for g, p in probs.items()],
+                wmap_schema,
             )
             clf = classifier_factory()
             if hasattr(clf, "setWeightCol"):
@@ -285,7 +294,8 @@ def grid_bounded_loss_census(
     else:
         best = min(rows, key=lambda r: (max(r[4], r[5]), r[0]))[0]
     out = [r + (r[0] == best,) for r in rows]
-    return df.sparkSession.createDataFrame(
+    return local_table(
+        df.sparkSession,
         out,
         "g int, lam0 double, lam1 double, c int, loss0 double, "
         "loss1 double, err double, feasible boolean, selected boolean",

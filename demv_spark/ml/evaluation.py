@@ -19,7 +19,9 @@ metrics per fold (utils.py:136-158, 242-261). Here:
 - ``cross_val`` fits a fit→predict hook per split (the MLlib pipeline
   by default, the EG/GridSearch reductions from cli) and scores all k
   folds in ONE grouped pass per metric call (fairness_suite /
-  zero_one_loss_diff grouped by fold);
+  zero_one_loss_diff grouped by fold); the per-fold table it returns
+  is an Arrow local relation (``session.local_table``), so reading it
+  runs no Python-worker task;
 - ``out_of_fold_predictions`` runs the same loop and returns its
   union materialised (eager localCheckpoint), so the result reads no
   fold cache once the call returns;
@@ -45,8 +47,10 @@ from functools import reduce
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from demv_spark.functions import metrics as M
+from demv_spark.session import local_table
 
 
 def assign_folds(
@@ -328,8 +332,9 @@ def cross_val(
     `prediction` column to a test split (the EG/GridSearch reductions,
     the reference's exp=True branch).
 
-    Returns one row per fold: (fold, stat_par, disp_imp, eq_odds, acc,
-    zero_one_loss)."""
+    Returns one row per fold, as an Arrow local relation: columns acc,
+    disp_imp, eq_odds, fold, stat_par, zero_one_loss (fold first when
+    fold 0 has no test rows)."""
     if fit is None:
         pipe = _pipeline(feature_cols, label_col, classifier)
 
@@ -358,7 +363,14 @@ def cross_val(
     loss = {r["fold"]: r.asDict() for r in loss}
     # a fold with no test rows keeps its row, with null metrics
     rows = [{**suite.get(f, {}), **loss.get(f, {}), "fold": f} for f in range(k)]
-    return df.sparkSession.createDataFrame(rows)
+    # the column order PySpark's list inference gave this table: each
+    # row's keys sorted, merged in row order (so an empty fold 0 puts
+    # `fold` first); `fold` is bigint, every metric double
+    names = dict.fromkeys(c for r in rows for c in sorted(r))
+    schema = StructType(
+        [StructField(c, LongType() if c == "fold" else DoubleType()) for c in names]
+    )
+    return local_table(df.sparkSession, rows, schema)
 
 
 def repeated_demv_eval(

@@ -19,8 +19,9 @@ Spark-first redesign (SURVEY.md §4):
    ``get_iters()`` matches the reference for any Δn without O(Δn)
    work per row.
 3. **Resample** — ONE pass over the data: broadcast-join the
-   group→target map, rank rows within each group by seeded ``rand``,
-   keep/duplicate by closed form::
+   group→target map (an Arrow local relation built on the driver, so
+   scanning it runs no Python-worker task), rank rows within each
+   group by seeded ``rand``, keep/duplicate by closed form::
 
        base  = target div n,  extra = target mod n   (mod n of target)
        copies(row) = base + 1 if rank <= extra else base
@@ -43,6 +44,9 @@ from collections.abc import Sequence
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
+from pyspark.sql.types import LongType, StructField, StructType
+
+from demv_spark.session import local_table
 
 
 def _simulate_target(
@@ -275,13 +279,21 @@ def _join_targets(df: DataFrame, keys: list[str], targets: list[dict]) -> DataFr
     """Broadcast-join the tiny group→(n, target) map onto the data with
     NULL-SAFE key equality: the census enumerates NULL-keyed groups
     (groupBy treats NULL as a value), so a plain equi-join would
-    silently drop every row whose sensitive/label key is NULL."""
-    spark = df.sparkSession
+    silently drop every row whose sensitive/label key is NULL.
+
+    The map is an Arrow local relation (``session.local_table``) typed
+    from ``df.schema`` for its keys and ``long`` for ``__n``/
+    ``__target``, so broadcasting it runs no Python-worker task."""
+    schema = StructType(
+        [StructField(f"__t_{k}", df.schema[k].dataType) for k in keys]
+        + [StructField("__n", LongType()), StructField("__target", LongType())]
+    )
     tgt = F.broadcast(
-        spark.createDataFrame(
-            [{**{k: t[k] for k in keys}, "__n": t["n"], "__target": t["target"]}
-             for t in targets]
-        ).withColumnsRenamed({k: f"__t_{k}" for k in keys})
+        local_table(
+            df.sparkSession,
+            [(*(t[k] for k in keys), t["n"], t["target"]) for t in targets],
+            schema,
+        )
     )
     cond = None
     for k in keys:

@@ -116,7 +116,8 @@ def _knn_threads(hint: int | None = None) -> int:
     """Thread count for the chunk pool. Priority: the
     DEMV_SPARK_KNN_THREADS env override, then ``hint`` (the caller's
     driver-side fair share — see ``_knn_thread_share``), then a
-    conservative local fallback. The r12 default (cpu_count/2 capped
+    conservative local fallback (an eighth of the cores this process
+    may run on, 1 to 4). The r12 default (cpu_count/2 capped
     at 8 *per task*) assumed a mostly-idle executor; under a full
     local[32] task wave that is up to 8×32 runnable threads and the
     driver's bench measured the oversubscription (VERDICT r12 item 2),
@@ -131,7 +132,7 @@ def _knn_threads(hint: int | None = None) -> int:
         return env
     if hint is not None and hint > 0:
         return min(8, hint)
-    return max(1, min(4, (os.cpu_count() or 2) // 8))
+    return max(1, min(4, len(os.sched_getaffinity(0)) // 8))
 
 
 def _knn_thread_share(df: DataFrame, n_groups: int) -> int:
@@ -153,7 +154,9 @@ def _knn_thread_share(df: DataFrame, n_groups: int) -> int:
 
         m = _re.match(r"local\[([0-9*]+)", master)
         if m:
-            cores = _os.cpu_count() if m.group(1) == "*" else int(m.group(1))
+            cores = (
+                len(_os.sched_getaffinity(0)) if m.group(1) == "*" else int(m.group(1))
+            )
     if cores is None:
         try:
             cores = int(conf.get("spark.executor.cores", "0")) or None

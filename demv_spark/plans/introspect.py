@@ -4,10 +4,11 @@ The 100 TB design rules (SURVEY.md §4) are checkable properties of
 the optimized physical plan: how many exchanges (shuffles), whether
 filters reached the parquet scan (PushedFilters), whether the scan
 schema was pruned (ReadSchema), how much of the plan runs inside
-whole-stage codegen, and whether any row-at-a-time Python UDF snuck
-into a hot path. ``plan_stats`` extracts those properties so tests
-and the bench can assert on them instead of eyeballing explain
-output.
+whole-stage codegen, whether any row-at-a-time Python UDF snuck
+into a hot path, and whether the plan scans a Python RDD (a
+driver-built ``createDataFrame(list)`` table). ``plan_stats``
+extracts those properties so tests and the bench can assert on them
+instead of eyeballing explain output.
 """
 
 from __future__ import annotations
@@ -35,6 +36,9 @@ def plan_stats(df: DataFrame) -> dict:
         "n_wholestage_codegen": len(re.findall(r"WholeStageCodegen", simple)),
         "has_python_udf": bool(re.search(r"BatchEvalPython|PythonUDF", simple)),
         "has_arrow_eval": bool(re.search(r"ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas", simple)),
+        # a scan of spark.createDataFrame(list): every scan runs
+        # Python-worker tasks (a localCheckpoint's ExistingRDD does not)
+        "has_python_rdd": "applySchemaToPythonRDD" in plan,
         "pushed_filters": re.findall(r"PushedFilters: \[([^\]]*)\]", plan),
         "read_schemas": re.findall(r"ReadSchema: (\S+)", plan),
     }

@@ -5,13 +5,18 @@ ones that matter identically on a real cluster: AQE (runtime shuffle
 coalescing + skew-join splitting), Arrow for any pandas interchange,
 and a shuffle-partition count sized for the workload rather than the
 200 default.
+
+``local_table`` is how the engine hands a small driver-built table
+(a target map, a weight map, a per-fold result) to Spark.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable, Mapping, Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -30,6 +35,10 @@ def get_spark(
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or int(cpus)
+    # driver heap: SPARK_DRIVER_MEM, else half of physical memory capped
+    # at 8 GB, so a small box is never promised more heap than it has
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    driver_mem = os.environ.get("SPARK_DRIVER_MEM") or f"{min(8192, half_mb)}m"
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -45,9 +54,34 @@ def get_spark(
         # toPandas of small results).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_table(
+    spark: SparkSession,
+    rows: Iterable[Mapping | Sequence],
+    schema: StructType | str,
+) -> DataFrame:
+    """A small driver-built table as an Arrow local relation.
+
+    ``rows`` are dicts (a missing key is null) or tuples in ``schema``
+    order; ``schema`` is a ``StructType`` or a DDL string, and the
+    result's schema equals it, nullability included. The plan is a
+    ``LocalTableScan``: scanning it runs no Python-worker task, where
+    ``spark.createDataFrame(list)`` builds a Python RDD whose every
+    scan does (≈0.25 s a task on a 4-core ``local[4]`` session, even
+    on a reused worker)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    names = schema.fieldNames()
+    records = [r if isinstance(r, Mapping) else dict(zip(names, r)) for r in rows]
+    table = pa.Table.from_pylist(records, schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)

@@ -818,3 +818,77 @@ def test_topk_chunked_ranks_union_in_one_window(spark):
     import re
 
     assert len(re.findall(r"\bWindow\b", simple)) == 1
+
+
+@pytest.fixture(scope="module")
+def census_table(spark):
+    """A label-biased table built from spark.range (no Python RDD of
+    its own), so a Python-RDD scan in a plan can only come from the
+    engine."""
+    from demv_spark.sources.generator import make_classification
+
+    base = make_classification(
+        spark, 400, n_features=2, n_classes=2, n_sensitive=1, seed=9
+    )
+    return base.withColumn(
+        "y",
+        F.when(
+            (F.col("s0") == 1) & (F.col("y") == 1) & (F.rand(4) < 0.5), 0
+        ).otherwise(F.col("y")),
+    )
+
+
+def test_paper_path_tables_scan_no_python_rdd(spark, census_table, monkeypatch):
+    """Every table the paper path builds on the driver is an Arrow
+    local relation: no plan below scans a ``createDataFrame(list)``
+    Python RDD, whose every scan costs Python-worker tasks."""
+    from demv_spark.ml import eg
+    from demv_spark.ml import evaluation as E
+
+    df = census_table
+    assert not plan_stats(df)["has_python_rdd"]
+    # the lint itself: a list-built table is flagged, its checkpoint not
+    listed = spark.createDataFrame([(1, 2.0)], "a int, b double")
+    assert plan_stats(listed)["has_python_rdd"]
+    assert not plan_stats(listed.localCheckpoint(eager=True))["has_python_rdd"]
+
+    uniform = DEMV(["s0"], label="y", seed=1).fit(df)
+    assert not plan_stats(uniform.transform(df))["has_python_rdd"]
+    smote = DEMV(["s0"], label="y", seed=1, strategy="smote").fit(df)
+    # both SMOTE branches are in the plan: exact shrink and synthetic grow
+    assert {t["target"] > t["n"] for t in smote._targets} == {True, False}
+    assert not plan_stats(smote.transform(df))["has_python_rdd"]
+
+    per_fold = E.cross_val(
+        df, ["f0", "f1"], "y", None, F.col("s0") == 0, 1, ["s0"], k=2,
+        fit=lambda train: lambda test: test.withColumn(
+            "prediction", F.col("s0").cast("double")
+        ),
+    )
+    assert not plan_stats(per_fold)["has_python_rdd"]
+    assert not plan_stats(eg.eg_bounded_loss_dynamics(df, "s0", "y"))[
+        "has_python_rdd"
+    ]
+    assert not plan_stats(eg.grid_bounded_loss_census(df, "s0", "y"))[
+        "has_python_rdd"
+    ]
+
+    # the weighted-fit input: the pipeline's fit sees the λ-weight join
+    fit_inputs = []
+
+    class _Captured(Exception):
+        pass
+
+    class _Pipe:
+        def fit(self, data):
+            fit_inputs.append(data)
+            raise _Captured
+
+    monkeypatch.setattr(E, "_pipeline", lambda *a, **kw: _Pipe())
+    with pytest.raises(_Captured):
+        eg.ExponentiatedGradientBGL(lambda: None, ["s0"], "y", iters=1).fit(
+            df, ["f0", "f1"]
+        )
+    (weighted,) = fit_inputs
+    assert "__eg_w" in weighted.columns
+    assert not plan_stats(weighted)["has_python_rdd"]

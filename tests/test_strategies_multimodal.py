@@ -57,6 +57,30 @@ def test_knn_thread_share_clamps_by_group_concurrency(spark):
     assert (d1 == d4).all()
 
 
+def test_knn_threads_follow_cpu_affinity(monkeypatch):
+    """Thread sizing counts the cores this process may run on, not the
+    machine's: a 2-core affinity on a 64-core box is 2 cores."""
+    import os
+    from types import SimpleNamespace
+
+    from demv_spark.operators.strategies import _knn_thread_share, _knn_threads
+
+    monkeypatch.delenv("DEMV_SPARK_KNN_THREADS", raising=False)
+    monkeypatch.setattr(os, "sched_getaffinity", lambda pid: {0, 1})
+    monkeypatch.setattr(os, "cpu_count", lambda: 64)
+    conf = {"spark.master": "local[*]"}
+    df = SimpleNamespace(
+        sparkSession=SimpleNamespace(
+            sparkContext=SimpleNamespace(
+                getConf=lambda: SimpleNamespace(get=lambda k, d=None: conf.get(k, d))
+            )
+        )
+    )
+    assert _knn_thread_share(df, n_groups=1) == 2
+    assert _knn_thread_share(df, n_groups=8) == 1
+    assert _knn_threads() == 1
+
+
 def test_synthetic_rows_interpolate_within_group_range(spark):
     df = _skewed_df(spark)
     d = DEMV(["s"], label="y", strategy="smote", seed=5)
