@@ -26,7 +26,7 @@ SQL-side equivalents (used by __spark_entry__.oracle_sql):
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column
+from pyspark.sql import Column, Window
 
 DECIMAL_T = "decimal(28,6)"
 
@@ -75,16 +75,18 @@ def null_safe_broadcast_join(left, right, keys, eq_cols=(), carry=()):
     on ``keys`` (plus plain equality on ``eq_cols``), returning all of
     ``left``'s columns and ``carry`` columns from ``right``.
 
-    The shared idiom behind the salted-rank offset joins
-    (operators/corpus.cap_per_key, functions/metrics.auc_exact): a
-    plain equi-join on user key columns silently DROPS NULL-keyed
-    rows (NULL = NULL is never true), deleting data from operators
-    whose contract is flag-not-filter, or losing the NULL sensitive
-    group's row from a parity report. ``eqNullSafe`` per key keeps
-    NULL groups first-class; ``eq_cols`` stays plain equality for
-    internal never-NULL columns (bucket ids)."""
-    from pyspark.sql import DataFrame  # noqa: F401 (doc typing only)
-
+    The one way a per-group table joins back onto rows: DEMV's target
+    map and reweighing's weights (operators/balancer), the
+    post-processors' score cuts and quota bounds
+    (operators/postprocess), ``bucketed_rank``'s offsets, the salted
+    offsets of operators/corpus.cap_per_key and
+    functions/metrics.auc_exact, and the per-group stats of
+    operators/etl. A plain equi-join on user key columns silently
+    DROPS NULL-keyed rows (NULL = NULL is never true), deleting data
+    from operators whose contract is flag-not-filter, or losing the
+    NULL sensitive group's row from a parity report. ``eqNullSafe``
+    per key keeps NULL groups first-class; ``eq_cols`` stays plain
+    equality for internal never-NULL columns (bucket ids)."""
     if not keys and not eq_cols:
         # left.join(right, None) would silently degenerate to a CROSS
         # join — surface the caller bug instead (ADVICE round 5)
@@ -101,3 +103,36 @@ def null_safe_broadcast_join(left, right, keys, eq_cols=(), carry=()):
         term = left[k].eqNullSafe(odf[k])
         cond = term if cond is None else cond & term
     return left.join(odf, cond).select(left["*"], *[odf[c] for c in carry])
+
+
+def bucketed_rank(df, keys, buckets, order):
+    """Exact ``row_number()`` over ``partitionBy(*keys).orderBy(*buckets,
+    *order)`` without one task owning a whole key: rows rank within
+    (keys, buckets), then each row adds the exact count of rows in
+    earlier buckets of its key. Adds ``__rn``; keeps every column.
+
+    The two-phase rank behind DEMV's salted resample (a random salt
+    bucket, random order) and the post-processors' range-bucketed
+    ranks (score buckets aligned with the score order). The offsets
+    come from a per-(keys, buckets) census — a few rows per key — and
+    join back NULL-safely on keys and buckets alike, so NULL keys and
+    NULL bucket values (which sort first) keep their rows."""
+    ranked = df.withColumn(
+        "__lrn",
+        F.row_number().over(Window.partitionBy(*keys, *buckets).orderBy(*order)),
+    )
+    earlier = (
+        Window.partitionBy(*keys)
+        .orderBy(*buckets)
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    offsets = (
+        ranked.groupBy(*keys, *buckets)
+        .agg(F.count(F.lit(1)).alias("__bn"))
+        .withColumn("__off", F.coalesce(F.sum("__bn").over(earlier), F.lit(0)))
+    )
+    return (
+        null_safe_broadcast_join(ranked, offsets, [*keys, *buckets], carry=["__off"])
+        .withColumn("__rn", F.col("__lrn") + F.col("__off"))
+        .drop("__lrn", "__off")
+    )

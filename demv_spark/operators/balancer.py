@@ -33,9 +33,13 @@ Spark-first redesign (SURVEY.md §4):
 
 Scale notes (100 TB): the only driver-side data is the census
 (≤ Π|domains| rows). The ranking window partitions by the full group
-key; under heavy per-group skew use ``skew_salt`` to rank in two
-phases (salted local rank + per-salt offsets) so no single task owns a
-whole group.
+key; once a group outgrows one ranking task (``AUTO_SALT_GROUP_ROWS``,
+read by ``resolve_auto_salt`` at call time) the rank runs in two
+phases through ``compat.bucketed_rank`` (random salt bucket + exact
+per-salt offsets), so no single task owns a whole group. Every
+per-group table — targets, weights, offsets — joins back through
+``compat.null_safe_broadcast_join``: a NULL sensitive or label value
+is a group like any other on both paths.
 """
 
 from __future__ import annotations
@@ -46,6 +50,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 from pyspark.sql.types import LongType, StructField, StructType
 
+from demv_spark.functions.compat import bucketed_rank, null_safe_broadcast_join
+from demv_spark.functions.counting import group_weights
 from demv_spark.session import local_table
 
 
@@ -219,11 +225,15 @@ AUTO_SALT_GROUP_ROWS = 4_000_000
 
 
 def resolve_auto_salt(
-    group_sizes: Sequence[int], group_rows: int = AUTO_SALT_GROUP_ROWS
+    group_sizes: Sequence[int], group_rows: int | None = None
 ) -> int | None:
     """Salting decision from a group-size census: None while every
     group fits one ranking task, else enough buckets that no bucket
-    exceeds ``group_rows``."""
+    exceeds ``group_rows`` (default: ``AUTO_SALT_GROUP_ROWS``, read
+    at call time). The one place every ``"auto"`` skew setting is
+    decided: DEMV, ``rebalance`` and the post-processors."""
+    if group_rows is None:
+        group_rows = AUTO_SALT_GROUP_ROWS
     biggest = max(group_sizes, default=0)
     if biggest <= group_rows:
         return None
@@ -259,7 +269,12 @@ def rebalance(
     joined = _join_targets(df, keys, targets)
 
     if skew_salt:
-        rn = _salted_rank(joined, keys, seed, skew_salt)
+        # salt bucket per row, then the exact two-phase rank: a giant
+        # group spreads over ``skew_salt`` ranking tasks
+        salted = joined.withColumn(
+            "__salt", (F.rand(seed + 1) * skew_salt).cast("int")
+        )
+        rn = bucketed_rank(salted, keys, ["__salt"], [F.rand(seed)])
     else:
         w = Window.partitionBy(*keys).orderBy(F.rand(seed))
         rn = joined.withColumn("__rn", F.row_number().over(w))
@@ -285,54 +300,15 @@ def _join_targets(df: DataFrame, keys: list[str], targets: list[dict]) -> DataFr
     from ``df.schema`` for its keys and ``long`` for ``__n``/
     ``__target``, so broadcasting it runs no Python-worker task."""
     schema = StructType(
-        [StructField(f"__t_{k}", df.schema[k].dataType) for k in keys]
+        [StructField(k, df.schema[k].dataType) for k in keys]
         + [StructField("__n", LongType()), StructField("__target", LongType())]
     )
-    tgt = F.broadcast(
-        local_table(
-            df.sparkSession,
-            [(*(t[k] for k in keys), t["n"], t["target"]) for t in targets],
-            schema,
-        )
+    tgt = local_table(
+        df.sparkSession,
+        [(*(t[k] for k in keys), t["n"], t["target"]) for t in targets],
+        schema,
     )
-    cond = None
-    for k in keys:
-        c = df[k].eqNullSafe(tgt[f"__t_{k}"])
-        cond = c if cond is None else (cond & c)
-    return df.join(tgt, on=cond, how="inner").drop(*[f"__t_{k}" for k in keys])
-
-
-def _salted_rank(joined: DataFrame, keys: list[str], seed: int, salt: int) -> DataFrame:
-    """Skew-safe exact global rank within each group.
-
-    Phase 1: random salt bucket per row; rank within (group, salt) —
-    the shuffle key has ``salt``× the cardinality, so no single task
-    owns a whole skewed group. Phase 2: per-(group, salt) counts →
-    exact prefix offsets via a window over that tiny table →
-    broadcast back. rank = local_rank + offset(group, salt).
-    """
-    salted = joined.withColumn(
-        "__salt", (F.rand(seed + 1) * salt).cast("int")
-    )
-    w_local = Window.partitionBy(*keys, "__salt").orderBy(F.rand(seed))
-    local = salted.withColumn("__lrn", F.row_number().over(w_local))
-
-    bucket_counts = local.groupBy(*keys, "__salt").agg(
-        F.count(F.lit(1)).alias("__bn")
-    )
-    w_off = (
-        Window.partitionBy(*keys)
-        .orderBy("__salt")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = bucket_counts.withColumn(
-        "__off", F.coalesce(F.sum("__bn").over(w_off), F.lit(0))
-    ).drop("__bn")
-    return (
-        local.join(F.broadcast(offsets), [*keys, "__salt"])
-        .withColumn("__rn", F.col("__lrn") + F.col("__off"))
-        .drop("__lrn", "__off")
-    )
+    return null_safe_broadcast_join(df, tgt, keys, carry=["__n", "__target"])
 
 
 class DEMV:
@@ -380,10 +356,6 @@ class DEMV:
         keyed on these identity columns — the shape for groups too
         large for one executor's grouped applyInPandas worker.
     """
-
-    # mirrors the module-level AUTO_SALT_GROUP_ROWS as a class
-    # attribute so tests can lower the cutoff per-instance
-    AUTO_SALT_GROUP_ROWS = 4_000_000
 
     def __init__(
         self,
@@ -444,18 +416,11 @@ class DEMV:
         self.iter = max((t["iters"] for t in self._targets), default=0)
         return self
 
-    def _resolve_salt(self) -> int | None:
-        if self.skew_salt != "auto":
-            return self.skew_salt
-        return resolve_auto_salt(
-            [t["n"] for t in self._targets], self.AUTO_SALT_GROUP_ROWS
-        )
-
     def transform(self, df: DataFrame) -> DataFrame:
         if self.strategy == "uniform":
             out = rebalance(
                 df, self.sensitive_vars, self.label, self._targets,
-                seed=self.seed, skew_salt=self._resolve_salt(),
+                seed=self.seed, skew_salt=self.skew_salt,
             )
         elif self.lsh_id_cols is not None:
             # the NO-UDF scale path: a group never has to fit one
@@ -521,30 +486,14 @@ def reweighing(
     engine-side hook for reduction methods (every MLlib classifier
     here takes ``weightCol``).
 
-    Plan: ONE census scan (groupBy sensitive × label), marginals as
-    window sums over the tiny census, broadcast-join the |groups|-row
-    weight map back — the base table is scanned twice total (census +
-    join), never shuffled on data rows.
+    Plan: the weight is ``w_exp / w_obs`` of ``counting.group_weights``
+    (ONE census scan, marginals as window sums over the tiny census),
+    broadcast-joined NULL-safely back onto the rows — the base table
+    is scanned twice total (census + join), never shuffled on data
+    rows.
     """
     keys = [*sensitive, label]
-    census = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("__n"))
-    w_sens = Window.partitionBy(*sensitive)
-    w_lab = Window.partitionBy(label)
-    w_all = Window.partitionBy()
-    weights = census.select(
-        *keys,
-        (
-            (F.sum("__n").over(w_sens) / F.sum("__n").over(w_all))
-            * (F.sum("__n").over(w_lab) / F.sum("__n").over(w_all))
-            / (F.col("__n") / F.sum("__n").over(w_all))
-        ).alias(out),
+    weights = group_weights(df, sensitive, label, round_level=None).select(
+        *keys, (F.col("w_exp") / F.col("w_obs")).alias(out)
     )
-    spark = df.sparkSession
-    tgt = F.broadcast(weights.withColumnsRenamed({k: f"__t_{k}" for k in keys}))
-    cond = None
-    for k in keys:
-        c = df[k].eqNullSafe(tgt[f"__t_{k}"])
-        cond = c if cond is None else (cond & c)
-    return df.join(tgt, on=cond, how="inner").drop(
-        *[f"__t_{k}" for k in keys]
-    ).select(*df.columns, out)
+    return null_safe_broadcast_join(df, weights, keys, carry=[out])

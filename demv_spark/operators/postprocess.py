@@ -5,6 +5,12 @@ prediction table (utils.py:362-379; the `balancers` package is not
 shipped). The engine-native equivalent is per-group threshold
 adjustment over a score column: pure window/when expressions, one
 pass, no UDF.
+
+Both ranking post-processors decide ``"auto"`` skew handling through
+``balancer.resolve_auto_salt`` and rank skewed groups with
+``compat.bucketed_rank``; their per-group tables (score cuts, quota
+bounds) join back through ``compat.null_safe_broadcast_join``, so a
+NULL group value is a group like any other on every path.
 """
 
 from __future__ import annotations
@@ -13,6 +19,10 @@ from collections.abc import Sequence
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql.types import LongType, NumericType, StructField, StructType
+
+from demv_spark.functions.compat import bucketed_rank, null_safe_broadcast_join
+from demv_spark.operators.balancer import resolve_auto_salt
 
 
 def group_threshold_adjust(
@@ -52,35 +62,30 @@ def equalize_positive_rates(
     switches to the range-bucketed exact rank: per-group approximate
     score quantiles split each group into score-range buckets, rows
     rank within (group, bucket), and exact per-bucket prefix counts
-    restore the global rank — same output bit-for-bit (equal scores
-    never straddle a bucket, so the tiebreak order is preserved), but
-    no task ever owns more than ~one bucket of a group."""
-    from demv_spark.operators import balancer as _balancer
-
+    restore the global rank (``compat.bucketed_rank``) — same output
+    bit-for-bit, NULL groups included (equal scores never straddle a
+    bucket, so the tiebreak order is preserved), but no task ever
+    owns more than ~one bucket of a group."""
+    gcols = list(group_cols)
     if skew_buckets == "auto":
         sizes = [
             r["__gn"]
-            for r in df.groupBy(*group_cols).agg(F.count(F.lit(1)).alias("__gn")).collect()
+            for r in df.groupBy(*gcols).agg(F.count(F.lit(1)).alias("__gn")).collect()
         ]
-        # module-attr lookup (not a default arg) so tests can lower it
-        skew_buckets = _balancer.resolve_auto_salt(
-            sizes, _balancer.AUTO_SALT_GROUP_ROWS
-        )
+        skew_buckets = resolve_auto_salt(sizes)
 
-    n = F.count(F.lit(1)).over(Window.partitionBy(*group_cols))
+    n = F.count(F.lit(1)).over(Window.partitionBy(*gcols))
+    order = [F.col(score_col).desc(), *[F.col(t) for t in tiebreak]]
     if not skew_buckets or skew_buckets <= 1:
-        w = Window.partitionBy(*group_cols).orderBy(
-            F.col(score_col).desc(), *[F.col(t) for t in tiebreak]
-        )
-        rn = F.row_number().over(w)
+        rn = F.row_number().over(Window.partitionBy(*gcols).orderBy(*order))
         return df.withColumn(out, (rn <= F.ceil(n * F.lit(rate))).cast("int"))
 
-    ranked = _ranked_by_score_bucketed(
-        df, list(group_cols), score_col, list(tiebreak), int(skew_buckets)
+    bucketed = _score_buckets(df, gcols, score_col, int(skew_buckets))
+    return (
+        bucketed_rank(bucketed, gcols, ["__b"], order)
+        .withColumn(out, (F.col("__rn") <= F.ceil(n * F.lit(rate))).cast("int"))
+        .drop("__b", "__rn")
     )
-    return ranked.withColumn(
-        out, (F.col("__rn") <= F.ceil(n * F.lit(rate))).cast("int")
-    ).drop("__rn")
 
 
 def multiclass_quota_adjust(
@@ -116,7 +121,9 @@ def multiclass_quota_adjust(
     array scan — no per-row join fan-out (a rank≤boundary non-equi
     join would multiply rows by matching classes before re-collapsing;
     the array filter does the same selection inside codegen). The only
-    big-data op is the per-group ranking window — one shuffle.
+    big-data op is the per-group ranking window — one shuffle. The
+    bounds join NULL-safely, so a NULL group keeps its rows. The
+    output keeps the input's columns in order, plus ``out``.
 
     Skew: groups here are demographic slices (few, huge), so the
     naive per-group window serializes a whole demographic into one
@@ -124,9 +131,11 @@ def multiclass_quota_adjust(
     as ``equalize_positive_rates``) decomposes the rank when the
     biggest group exceeds ``balancer.AUTO_SALT_GROUP_ROWS`` AND
     ``order_cols`` is the canonical ``[pred_col, numeric_key]`` shape:
-    the global rank is the per-(group, pred-class) prefix count (from
-    a tiny census window) plus a range-bucketed exact rank on the key
-    within each (group, class) slice — bit-identical output, but no
+    each (group, class) slice splits into key-range buckets and
+    ``compat.bucketed_rank`` ranks within (group; class, bucket) — the
+    count of rows in earlier (class, bucket) cells of the group plus
+    the local rank is the global rank, so the output is bit-identical
+    to the plain window, NULL groups and classes included, but no
     task ever owns more than ~one bucket of one class of one group.
     Other ``order_cols`` shapes keep the plain window.
     """
@@ -153,8 +162,6 @@ def multiclass_quota_adjust(
     # inherent — but bound it: take(cap+1) transfers at most cap+1
     # rows and a too-wide group key fails fast with a clear error
     # instead of an OOM.
-    from pyspark.sql.types import LongType, StructField, StructType
-
     _MAX_GROUPS = 1_000_000
     size_rows = (
         df.groupBy(*gcols).agg(F.count(F.lit(1)).alias("__gn")).take(_MAX_GROUPS + 1)
@@ -186,9 +193,6 @@ def multiclass_quota_adjust(
             ]
         ),
     ).drop("__gn")
-    from demv_spark.operators import balancer as _balancer
-    from pyspark.sql.types import NumericType
-
     can_decompose = (
         len(ocols) == 2
         and ocols[0] == pred_col
@@ -196,67 +200,45 @@ def multiclass_quota_adjust(
     )
     if skew_buckets == "auto":
         group_rows = [r["__gn"] for r in size_rows]
-        skew_buckets = (
-            _balancer.resolve_auto_salt(group_rows, _balancer.AUTO_SALT_GROUP_ROWS)
-            if can_decompose
-            else None
-        )
+        skew_buckets = resolve_auto_salt(group_rows) if can_decompose else None
 
     if not skew_buckets or skew_buckets <= 1:
         w = Window.partitionBy(*gcols).orderBy(*[F.col(c) for c in ocols])
         ranked = df.withColumn("__rn", F.row_number().over(w))
     else:
-        # decomposed exact rank: global rank = prefix count of earlier
-        # pred classes within the group (tiny census window) + local
-        # bucketed rank on the key within (group, class)
-        key = ocols[1]
-        class_counts = df.groupBy(*gcols, pred_col).agg(
-            F.count(F.lit(1)).alias("__cn")
+        # exact rank over the (class, key-bucket) cells of each group
+        bucketed = _score_buckets(
+            df, [*gcols, pred_col], ocols[1], int(skew_buckets), ascending=True
         )
-        w_prefix = (
-            Window.partitionBy(*gcols)
-            .orderBy(pred_col)
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        prefixes = class_counts.withColumn(
-            "__off", F.coalesce(F.sum("__cn").over(w_prefix), F.lit(0))
-        ).drop("__cn")
-        local = _ranked_by_score_bucketed(
-            df, [*gcols, pred_col], key, [], int(skew_buckets), ascending=True
-        )
-        ranked = (
-            local.join(F.broadcast(prefixes), [*gcols, pred_col])
-            .withColumn("__rn", F.col("__rn") + F.col("__off"))
-            .drop("__off")
-        )
+        ranked = bucketed_rank(
+            bucketed, gcols, [pred_col, "__b"], [F.col(ocols[1]).asc()]
+        ).drop("__b")
     rn = F.col("__rn")
     pick = F.element_at(
         F.filter(F.col("__bounds"), lambda x: rn <= x["b"]), 1
     )["cls"]
     return (
-        ranked.join(F.broadcast(bounds), gcols)
+        null_safe_broadcast_join(ranked, bounds, gcols, carry=["__bounds"])
         .withColumn(out, pick)
         .drop("__rn", "__bounds")
     )
 
 
-def _ranked_by_score_bucketed(
+def _score_buckets(
     df: DataFrame,
     group_cols: list[str],
     score_col: str,
-    tiebreak: list[str],
     buckets: int,
     ascending: bool = False,
 ) -> DataFrame:
-    """Exact per-group rank by (score DESC|ASC, tiebreak) without a
-    per-group total order: range-partition each group by its own
-    approximate score quantiles, rank locally, then add exact prefix
-    counts. Unlike the balancer's random-salt rank (valid only for a
-    random order), the buckets here are ALIGNED with the sort order,
-    so local-rank + offset reproduces the global rank exactly. The
-    quantile cuts only balance the buckets — any cuts give the exact
-    result, because equal scores always share a bucket (strict
-    comparison) and bucket index is monotone in the sort order."""
+    """Add ``__b``: each row's score-range bucket within its group,
+    from the group's own approximate score quantiles. Unlike the
+    balancer's random salt (valid only for a random order), these
+    buckets are ALIGNED with the sort order, so ``bucketed_rank``
+    over them reproduces the per-group rank exactly. The quantile
+    cuts only balance the buckets — any cuts give the exact result,
+    because equal scores always share a bucket (strict comparison)
+    and bucket index is monotone in the sort order."""
     fracs = [i / buckets for i in range(1, buckets)]
     cuts = df.groupBy(*group_cols).agg(
         F.percentile_approx(score_col, fracs, 10_000).alias("__cuts")
@@ -269,7 +251,6 @@ def _ranked_by_score_bucketed(
             F.when(s.isNull() | F.col("__cuts").isNull(), F.lit(-1))
             .otherwise(F.size(F.filter("__cuts", lambda c: c < s)))
         )
-        order = [s.asc(), *[F.col(t) for t in tiebreak]]
     else:
         # bucket 0 = highest scores (count of cuts strictly above the
         # score), monotone non-increasing in score; NULL scores — which
@@ -278,31 +259,8 @@ def _ranked_by_score_bucketed(
             F.when(s.isNull() | F.col("__cuts").isNull(), F.lit(buckets))
             .otherwise(F.size(F.filter("__cuts", lambda c: c > s)))
         )
-        order = [s.desc(), *[F.col(t) for t in tiebreak]]
-    local = (
-        df.join(F.broadcast(cuts), group_cols)
+    return (
+        null_safe_broadcast_join(df, cuts, group_cols, carry=["__cuts"])
         .withColumn("__b", bucket)
         .drop("__cuts")
-        .withColumn(
-            "__lrn",
-            F.row_number().over(
-                Window.partitionBy(*group_cols, "__b").orderBy(*order)
-            ),
-        )
-    )
-    bucket_counts = local.groupBy(*group_cols, "__b").agg(
-        F.count(F.lit(1)).alias("__bn")
-    )
-    w_off = (
-        Window.partitionBy(*group_cols)
-        .orderBy("__b")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = bucket_counts.withColumn(
-        "__off", F.coalesce(F.sum("__bn").over(w_off), F.lit(0))
-    ).drop("__bn")
-    return (
-        local.join(F.broadcast(offsets), [*group_cols, "__b"])
-        .withColumn("__rn", F.col("__lrn") + F.col("__off"))
-        .drop("__b", "__lrn", "__off")
     )

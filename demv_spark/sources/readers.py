@@ -100,6 +100,11 @@ _PLAN_CACHE: dict[tuple, tuple[SparkSession, DataFrame]] = {}
 _PLAN_CACHE_MAX = 256
 
 
+# on-disk parquet bytes per partition of the under-split spread
+# repartition (see _spread_target)
+SPREAD_SPLIT_BYTES = 262144
+
+
 def _spread_target(path: str, parallelism: int) -> int:
     """Partition count for the under-split spread repartition,
     derived from the INPUT SIZE instead of pinned to the core count
@@ -108,22 +113,14 @@ def _spread_target(path: str, parallelism: int) -> int:
     ways buys nothing downstream — every stage pays 32 task launches
     and a 32-block shuffle for a few thousand rows — and it is why
     tiny-table queries ran FASTER at 8 cores than 32 (the 8-core run
-    repartitioned to 8). One partition per
-    ``DEMV_SPARK_SPREAD_SPLIT_BYTES`` of on-disk parquet (default
-    256 KiB ≈ a few thousand text rows — the best of an interleaved
-    0/128K/256K/512K sweep over 12 affected queries, 39.9→25.1 s),
-    clamped to [2, parallelism]; 0 restores the old
-    pin-to-parallelism behavior. Production-scale inputs have enough
-    natural splits that the spread never fires."""
+    repartitioned to 8). One partition per ``SPREAD_SPLIT_BYTES`` of
+    on-disk parquet (256 KiB ≈ a few thousand text rows — the best of
+    an interleaved 0/128K/256K/512K sweep over 12 affected queries,
+    39.9→25.1 s), clamped to [2, parallelism]. Production-scale
+    inputs have enough natural splits that the spread never fires."""
     import math
     import os as _os
 
-    try:
-        per = int(_os.environ.get("DEMV_SPARK_SPREAD_SPLIT_BYTES", "262144"))
-    except ValueError:
-        per = 262144
-    if per <= 0:
-        return parallelism
     size = 0
     try:
         if _os.path.isdir(path):
@@ -136,7 +133,9 @@ def _spread_target(path: str, parallelism: int) -> int:
             size = _os.path.getsize(path)
     except OSError:
         return parallelism
-    return max(min(2, parallelism), min(parallelism, math.ceil(size / per)))
+    return max(
+        min(2, parallelism), min(parallelism, math.ceil(size / SPREAD_SPLIT_BYTES))
+    )
 
 
 def _conf_bytes(spark: SparkSession, key: str, default: int) -> int:

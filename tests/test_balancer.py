@@ -74,6 +74,15 @@ def _fixture_df(spark, n=400, seed=5):
     return spark.createDataFrame(rows, ["f1", "f2", "s1", "s2", "y"])
 
 
+def _null_group_df(spark, n=600):
+    """Every fifth row has a NULL sensitive value: a NULL group per
+    label, 120 of the 600 rows."""
+    rows = [
+        (i, None if i % 5 == 0 else i % 2, int(i % 7 < 3)) for i in range(n)
+    ]
+    return spark.createDataFrame(rows, "i long, s int, y int")
+
+
 def test_rebalance_exact_group_sizes(spark):
     df = _fixture_df(spark)
     d = DEMV(["s1", "s2"], label="y", round_level=1, seed=11)
@@ -115,16 +124,31 @@ def test_rebalance_deterministic(spark):
 
 
 def test_skew_salt_same_group_sizes(spark):
-    df = _fixture_df(spark, n=500)
-    plain = DEMV(["s1", "s2"], label="y", seed=4).fit_transform(df)
-    salted = DEMV(["s1", "s2"], label="y", seed=4, skew_salt=8).fit_transform(df)
-    key = ["s1", "s2", "y"]
-    a = {tuple(r[:3]): r["count"] for r in plain.groupBy(*key).count().collect()}
-    b = {tuple(r[:3]): r["count"] for r in salted.groupBy(*key).count().collect()}
-    assert a == b
+    # the salted rank must keep NULL-keyed groups exactly like the
+    # single-window rank does: every group hits its target
+    for df, sens, salt in (
+        (_fixture_df(spark, n=500), ["s1", "s2"], 8),
+        (_null_group_df(spark), ["s"], 4),
+    ):
+        key = [*sens, "y"]
+        plain_d = DEMV(sens, label="y", seed=4, skew_salt=None)
+        plain = plain_d.fit_transform(df)
+        salted = DEMV(sens, label="y", seed=4, skew_salt=salt).fit_transform(df)
+
+        def sizes(out):
+            return {
+                tuple(r[k] for k in key): r["count"]
+                for r in out.groupBy(*key).count().collect()
+            }
+
+        a, b = sizes(plain), sizes(salted)
+        want = {tuple(t[k] for k in key): t["target"] for t in plain_d._targets}
+        assert a == b == {k: v for k, v in want.items() if v > 0}
+        assert salted.count() == sum(want.values())
 
 
-def test_auto_salt_engages_on_skewed_census(spark):
+def test_auto_salt_engages_on_skewed_census(spark, monkeypatch):
+    from demv_spark.operators import balancer as bal
     from demv_spark.operators.balancer import resolve_auto_salt
 
     # decision function: below the cutoff -> unsalted; above -> enough
@@ -133,13 +157,21 @@ def test_auto_salt_engages_on_skewed_census(spark):
     assert resolve_auto_salt([5000, 10], 1000) == 5
     assert resolve_auto_salt([], 1000) is None
 
-    # a DEMV with a lowered per-instance cutoff picks the salted path
-    # on a skewed fixture and still hits the exact group targets
+    # a lowered module cutoff, read at call time, sends DEMV down the
+    # salted path on a skewed fixture; it still hits the exact targets
+    monkeypatch.setattr(bal, "AUTO_SALT_GROUP_ROWS", 40)
+    called = {}
+    orig = bal.bucketed_rank
+
+    def spy(df, keys, buckets, order):
+        called["buckets"] = buckets
+        return orig(df, keys, buckets, order)
+
+    monkeypatch.setattr(bal, "bucketed_rank", spy)
     df = _fixture_df(spark, n=500)
     d = DEMV(["s1", "s2"], label="y", seed=4)
-    d.AUTO_SALT_GROUP_ROWS = 40
     d.fit(df)
-    assert d._resolve_salt() is not None and d._resolve_salt() >= 2
+    assert resolve_auto_salt([t["n"] for t in d._targets]) >= 2
     out = d.transform(df)
     got = {
         (r["s1"], r["s2"], r["y"]): r["count"]
@@ -150,6 +182,7 @@ def test_auto_salt_engages_on_skewed_census(spark):
         if t["target"] > 0
     }
     assert got == want
+    assert called["buckets"] == ["__salt"]
 
 
 def test_get_iters_and_disparities(spark):

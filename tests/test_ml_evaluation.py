@@ -154,6 +154,8 @@ def test_equalize_bucketed_rank_exact(spark):
     rows = [(i, "big", float((i * 7) % 50), ) for i in range(900)]
     rows += [(1000 + i, "small", float(i % 5), ) for i in range(60)]
     rows += [(2000, "big", None), (2001, "small", None)]
+    # a NULL group is a group: the bucketed path must keep its rows
+    rows += [(3000 + i, None, float(i % 11)) for i in range(80)]
     df = spark.createDataFrame(rows, "id long, g string, score double")
     plain = equalize_positive_rates(
         df, ["g"], "score", rate=0.25, tiebreak=["id"], skew_buckets=None
@@ -163,7 +165,9 @@ def test_equalize_bucketed_rank_exact(spark):
     )
     a = {r["id"]: r["prediction_adj"] for r in plain.collect()}
     b = {r["id"]: r["prediction_adj"] for r in bucketed.collect()}
-    assert a == b
+    assert a == b and len(b) == len(rows)
+    assert bucketed.columns == plain.columns
+    assert sum(b[3000 + i] for i in range(80)) == 20
     # NULL scores sort last and never go positive at rate 0.25
     assert a[2000] == 0 and a[2001] == 0
 
@@ -177,13 +181,13 @@ def test_equalize_auto_picks_bucketed_path(spark, monkeypatch):
     # lower the cutoff so the 200-row groups count as "skewed"
     monkeypatch.setattr(balancer_mod, "AUTO_SALT_GROUP_ROWS", 50)
     called = {}
-    orig = pp._ranked_by_score_bucketed
+    orig = pp._score_buckets
 
     def spy(*args, **kw):
         called["buckets"] = args[-1]
         return orig(*args, **kw)
 
-    monkeypatch.setattr(pp, "_ranked_by_score_bucketed", spy)
+    monkeypatch.setattr(pp, "_score_buckets", spy)
     auto = pp.equalize_positive_rates(df, ["g"], "score", rate=0.5, tiebreak=["id"])
     got = {r["id"]: r["prediction_adj"] for r in auto.collect()}
     assert called["buckets"] == 4  # ceil(200 / 50)
@@ -262,25 +266,30 @@ def test_multiclass_quota_skew_path_matches_plain(spark, monkeypatch):
     from demv_spark.operators import postprocess as pp
 
     monkeypatch.setattr(bal, "AUTO_SALT_GROUP_ROWS", 50)
-    rows = [(i, "a" if i % 3 else "b", (i * 7) % 4) for i in range(300)]
-    df = spark.createDataFrame(rows, ["id", "g", "pred"])
-
     called = {}
-    orig = pp._ranked_by_score_bucketed
+    orig = pp._score_buckets
 
     def spy(*args, **kw):
         called["hit"] = True
         return orig(*args, **kw)
 
-    monkeypatch.setattr(pp, "_ranked_by_score_bucketed", spy)
-    auto = pp.multiclass_quota_adjust(df, ["g"], "pred", ["pred", "id"])
-    assert called.get("hit"), "auto skew path should trigger past the threshold"
-    plain = pp.multiclass_quota_adjust(
-        df, ["g"], "pred", ["pred", "id"], skew_buckets=None
-    )
-    a = {r["id"]: r["prediction_adj"] for r in auto.collect()}
-    b = {r["id"]: r["prediction_adj"] for r in plain.collect()}
-    assert a == b
+    monkeypatch.setattr(pp, "_score_buckets", spy)
+    # the second fixture has a NULL group (a fifth of its rows): both
+    # paths must assign every row
+    for rows in (
+        [(i, "a" if i % 3 else "b", (i * 7) % 4) for i in range(300)],
+        [(i, None if i % 5 == 0 else "ab"[i % 2], i % 3) for i in range(300)],
+    ):
+        df = spark.createDataFrame(rows, "id long, g string, pred int")
+        called.clear()
+        auto = pp.multiclass_quota_adjust(df, ["g"], "pred", ["pred", "id"])
+        assert called.get("hit"), "auto skew path should trigger past the threshold"
+        plain = pp.multiclass_quota_adjust(
+            df, ["g"], "pred", ["pred", "id"], skew_buckets=None
+        )
+        a = {r["id"]: r["prediction_adj"] for r in auto.collect()}
+        b = {r["id"]: r["prediction_adj"] for r in plain.collect()}
+        assert a == b and len(a) == len(rows)
 
 
 def test_multiclass_quota_auto_skips_non_canonical_order(spark, monkeypatch):

@@ -74,7 +74,7 @@ def test_memo_is_bounded(spark, tmp_table):
 def test_spread_target_scales_with_size(spark, tmp_table, monkeypatch):
     sf_dir, _ = tmp_table
     path = f"{sf_dir}/documents.parquet"
-    monkeypatch.setenv("DEMV_SPARK_SPREAD_SPLIT_BYTES", "1024")
+    monkeypatch.setattr(readers, "SPREAD_SPLIT_BYTES", 1024)
     size = sum(
         os.path.getsize(os.path.join(root, f))
         for root, _d, fs in os.walk(path)
@@ -85,9 +85,6 @@ def test_spread_target_scales_with_size(spark, tmp_table, monkeypatch):
     assert readers._spread_target(path, 64) == want
     # clamped by parallelism
     assert readers._spread_target(path, 2) == 2
-    # 0 restores pin-to-parallelism
-    monkeypatch.setenv("DEMV_SPARK_SPREAD_SPLIT_BYTES", "0")
-    assert readers._spread_target(path, 64) == 64
 
 
 def test_conf_bytes_parses_suffixes(spark):

@@ -65,7 +65,6 @@ def test_knn_threads_follow_cpu_affinity(monkeypatch):
 
     from demv_spark.operators.strategies import _knn_thread_share, _knn_threads
 
-    monkeypatch.delenv("DEMV_SPARK_KNN_THREADS", raising=False)
     monkeypatch.setattr(os, "sched_getaffinity", lambda pid: {0, 1})
     monkeypatch.setattr(os, "cpu_count", lambda: 64)
     conf = {"spark.master": "local[*]"}
