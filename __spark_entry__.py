@@ -72,7 +72,6 @@ _R8_BIRTHS: list[str] = [
     "q_stream_index_log",
     "q_stream_cdc_log",
     "q_demv_adasyn_rowcheck",
-    "q_media_jpeg_near_dup",
     "q_sketch_hll",
     "q_sketch_bloom_join",
     "q_text_chunk_windows",
@@ -134,18 +133,14 @@ _R8_WINDOW: list[str] = (
 # twice-green veterans and rotate out (VERDICT r8 item 5).
 _R9_BIRTHS: list[str] = [
     "q_dedup_corpus_e2e",
-    "q_media_jpeg_color",
     "q_corpus_dsir_weights",
     "q_events_session_features",
     "q_web_crawl_frontier",
     "q_stream_dsir_log",
-    "q_media_jpeg420",
     "q_privacy_t_closeness",
     "q_graph_triangles",
     "q_text_bpe_encode",
-    "q_media_gif_roundtrip",
     "q_web_robots_politeness",
-    "q_media_jpeg_progressive",
     "q_sim_covariance",
     "q_skew_salted_join",
     "q_layout_hilbert",
@@ -293,9 +288,9 @@ _R11_BIRTHS: list[str] = [
 ]
 
 # one seat per CORRECTNESS_r10 family not already covered by the
-# holds/births (q_events_asof_join, q_media_features,
-# q_text_tfidf_keywords, q_web_url_canon are opportunistic re-seats
-# of earlier-rotated veterans per the standing plan)
+# holds/births (q_events_asof_join, q_text_tfidf_keywords and
+# q_web_url_canon are opportunistic re-seats of earlier-rotated
+# veterans per the standing plan)
 _R11_FLAGSHIPS: list[str] = [
     "q_sketch_hll",
     "q_olap_star_join",
@@ -312,7 +307,6 @@ _R11_FLAGSHIPS: list[str] = [
     "q_events_asof_join",
     "q_layout_zorder",
     "q_linkage_best_match",
-    "q_media_features",
     "q_privacy_k_anon",
     "q_skew_salted_join",
     "q_text_tfidf_keywords",
@@ -345,7 +339,6 @@ _R11_RESEATS: list[str] = [
     "q_privacy_l_diversity",
     "q_stream_admission_log",
     "q_postprocess_equalize",
-    "q_media_audio_features",
 ]
 
 _R11_WINDOW: list[str] = (
@@ -425,7 +418,8 @@ _R12_FLAGSHIPS: list[str] = [
     "q_graph_triangles",
     "q_layout_hilbert",
     "q_linkage_fuzzy_join",
-    "q_media_resize_plan",
+    # the paper path's fairness suite: oracled, otherwise unseated
+    "q_metric_fairness_suite",
     "q_metric_accuracy",
     "q_ml_oof_majority",
     "q_olap_census_cube",
@@ -3131,121 +3125,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["q_dedup_hamming_pairs"] = _dedup_hamming_pairs
 
-    # image near-dup: REAL decoded pixels → integer-exact dHash hex →
-    # hex-banded Hamming pairs (pigeonhole on 2-hex-char chunks) —
-    # the multimodal composition of the generic core; oracle chains
-    # the closed-form dHash SQL with a brute-force popcount join
-    def _media_near_dup(spark, sf):
-        from demv_spark.operators.dedup import hamming_near_dup_hex
-        from demv_spark.operators.multimodal import (
-            image_dhash,
-            synthesize_media_real,
-        )
-
-        ids = _t(spark, sf, "nation").select("n_nationkey")
-        dh = image_dhash(synthesize_media_real(ids, "n_nationkey", kind="image"))
-        return hamming_near_dup_hex(
-            dh, "media_id", "dhash_hex", n_hex=16, max_hamming=4
-        )
-
-    q["q_media_near_dup"] = _media_near_dup
-
-    # JPEG near-dup (round 8, VERDICT r7 item 7): the same decode →
-    # dHash → hex-banded pairs composition over REAL baseline JPEG
-    # bytes decoded by the pure-stdlib codec (media_codecs.decode_jpeg
-    # — Huffman + dequant + IDCT; PIL takes over when importable).
-    # Fixtures are constant-8x8-tile grayscale images, which the lossy
-    # format round-trips bit-exactly (lone losslessly-coded DC per
-    # block), so the oracle re-derives the decoded pixels closed-form
-    def _media_jpeg_near_dup(spark, sf):
-        from demv_spark.operators.dedup import hamming_near_dup_hex
-        from demv_spark.operators.multimodal import (
-            image_dhash,
-            synthesize_media_real,
-        )
-
-        ids = _t(spark, sf, "nation").select("n_nationkey")
-        dh = image_dhash(synthesize_media_real(ids, "n_nationkey", kind="jpeg"))
-        return hamming_near_dup_hex(
-            dh, "media_id", "dhash_hex", n_hex=16, max_hamming=4
-        )
-
-    q["q_media_jpeg_near_dup"] = _media_jpeg_near_dup
-
-    # ---- COLOR JPEG decode (round 9, VERDICT r8 item 6) ----
-    # real baseline YCbCr 4:4:4 color JPEG bytes → stdlib decode →
-    # per-image integer channel sums. The fixture is constant 8x8 RGB
-    # tiles (mod-256 affine in id/bx/by), so the whole pipeline —
-    # RGB→YCbCr (floor(x+.5) doubles), lossless DC round-trip at
-    # dc_step=8, YCbCr→RGB back-transform, edge-tile crop — has a
-    # closed form the oracle re-derives per tile over a
-    # generate_series grid (the grayscale q_media_jpeg_near_dup
-    # trick, extended through the color transform)
-    def _media_jpeg_color(spark, sf):
-        from demv_spark.operators.multimodal import (
-            image_channel_sums,
-            synthesize_media_real,
-        )
-
-        ids = _t(spark, sf, "nation").select("n_nationkey")
-        media = synthesize_media_real(ids, "n_nationkey", kind="jpeg_color")
-        return image_channel_sums(media)
-
-    q["q_media_jpeg_color"] = _media_jpeg_color
-
-    # 4:2:0 subsampled color JPEG (round 9, second wave) — the
-    # dominant crawl/camera variant: constant 16×16 MACRO-tiles keep
-    # the lossless corner through subsampling (box-average of a
-    # constant is the constant), so the same closed-form oracle works
-    # at 16-px tile granularity
-    def _media_jpeg420(spark, sf):
-        from demv_spark.operators.multimodal import (
-            image_channel_sums,
-            synthesize_media_real,
-        )
-
-        ids = _t(spark, sf, "nation").select("n_nationkey")
-        media = synthesize_media_real(ids, "n_nationkey", kind="jpeg420")
-        return image_channel_sums(media)
-
-    q["q_media_jpeg420"] = _media_jpeg420
-
-    # progressive JPEG (round 9, sixth wave): real SOF2 streams with
-    # the libjpeg-shaped successive-approximation script (DC Al=2 +
-    # refinements, AC bands 1-5/6-63 with EOB runs) → stdlib
-    # multi-scan decode → integer channel sums. Constant 8×8 tiles
-    # keep the lossless corner THROUGH the progressive bit
-    # re-ordering, so the oracle is the closed tile form
-    def _media_jpeg_progressive(spark, sf):
-        from demv_spark.operators.multimodal import (
-            image_channel_sums,
-            synthesize_media_real,
-        )
-
-        ids = _t(spark, sf, "nation").select("n_nationkey")
-        media = synthesize_media_real(ids, "n_nationkey", kind="jpeg_prog")
-        return image_channel_sums(media)
-
-    q["q_media_jpeg_progressive"] = _media_jpeg_progressive
-
-    # GIF (round 9, sixth wave): real single-frame palette GIF89a
-    # bytes (stdlib LZW encoder) → stdlib decode → integer channel
-    # sums. GIF is LOSSLESS, so the oracle re-derives each pixel's
-    # palette entry directly over a generate_series grid — no tile
-    # trick needed (decoder convention pinned against real
-    # externally-produced GIFs in tests/test_media_codecs.py)
-    def _media_gif_roundtrip(spark, sf):
-        from demv_spark.operators.multimodal import (
-            image_channel_sums,
-            synthesize_media_real,
-        )
-
-        ids = _t(spark, sf, "nation").select("n_nationkey")
-        media = synthesize_media_real(ids, "n_nationkey", kind="gif")
-        return image_channel_sums(media)
-
-    q["q_media_gif_roundtrip"] = _media_gif_roundtrip
-
     # ORC interchange round-trip on the COMPLEX-typed table: write
     # embeddings (array<float>) to ORC with Spark's native
     # distributed writer, read back, census per label with an exact
@@ -3472,24 +3351,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["q_etl_grouped_quantiles"] = _etl_grouped_quantiles
 
-    # perceptual image dHash over REAL decoded PNG pixels: the hash is
-    # integer-exact by construction (channel-sum grayscale, floor
-    # blocks, cross-multiplied comparisons), so the oracle re-derives
-    # every bit from the closed-form pixel model over a LATERAL grid —
-    # the decode path is genuinely exercised on the Spark side while
-    # SQL never touches a codec
-    def _media_dhash(spark, sf):
-        from demv_spark.operators.multimodal import (
-            image_dhash,
-            synthesize_media_real,
-        )
-
-        ids = _t(spark, sf, "nation").select("n_nationkey")
-        media = synthesize_media_real(ids, "n_nationkey", kind="image")
-        return image_dhash(media)
-
-    q["q_media_dhash"] = _media_dhash
-
     # exact ROC AUC components (Mann-Whitney, tie-averaged ranks, all
     # integer) over a deterministic score correlated with the label
     def _ml_auc(spark, sf):
@@ -3532,20 +3393,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return auc_exact(base, "score", "y", group_cols=["grp"])
 
     q["q_ml_auc_by_group"] = _ml_auc_by_group
-
-    # audio twin: energy-difference fingerprint over real PCM decode,
-    # every bit re-derived in SQL from the closed-form sample model
-    def _media_audio_fp(spark, sf):
-        from demv_spark.operators.multimodal import (
-            audio_fingerprint,
-            synthesize_media_real,
-        )
-
-        ids = _t(spark, sf, "nation").select("n_nationkey")
-        media = synthesize_media_real(ids, "n_nationkey", kind="audio")
-        return audio_fingerprint(media)
-
-    q["q_media_audio_fp"] = _media_audio_fp
 
     # ---- quality-classifier inference (fastText-style linear) ----
     # integer hash-derived weights ⇒ the per-doc score is an exact
@@ -3599,79 +3446,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["q_dedup_winnow_pairs"] = lambda spark, sf: dedup.winnow_overlap_pairs(
         _t(spark, sf, "documents"), n=4, window=8, min_shared=2, max_df=50
     )
-
-    # ---- multimodal plumbing (synthesized deterministic media) ----
-    def _media(spark, sf):
-        from demv_spark.operators.multimodal import synthesize_media
-
-        return synthesize_media(
-            _t(spark, sf, "orders").select("o_orderkey").filter(
-                F.col("o_orderkey") < 2000
-            ),
-            "o_orderkey",
-        )
-
-    def _media_resize(spark, sf):
-        from demv_spark.operators.multimodal import resize_plan
-
-        return resize_plan(_media(spark, sf), max_side=56).select(
-            "media_id", "width", "height", "scale", "target_width", "target_height"
-        )
-
-    q["q_media_resize_plan"] = _media_resize
-
-    def _media_frames(spark, sf):
-        from demv_spark.operators.multimodal import frame_sample_plan
-
-        vids = _media(spark, sf).withColumn(
-            "duration_ms", (F.pmod(F.col("media_id"), 9000) + 1000).cast("int")
-        )
-        return frame_sample_plan(vids, every_ms=1000, max_frames=8)
-
-    q["q_media_frame_sample"] = _media_frames
-
-    # feature extraction exercises the Arrow mapInPandas decode stub —
-    # python-side hashing, no SQL twin → rows-only
-    def _media_features(spark, sf):
-        # REAL decode: synthesize genuine PNG payloads (zlib deflate,
-        # scanline filter cycling id%5) from the config-scale nation
-        # ids, decode them back with the stdlib codec, and emit decoded
-        # geometry + exact per-channel means — all re-derived in SQL by
-        # the oracle (integer pixel sums over a generate_series grid)
-        from demv_spark.operators.multimodal import (
-            extract_features,
-            synthesize_media_real,
-        )
-
-        ids = _t(spark, sf, "nation").select("n_nationkey")
-        media = synthesize_media_real(ids, "n_nationkey")
-        return extract_features(media, dim=8, real_codecs=True).select(
-            "media_id", "kind", "decoded_width", "decoded_height", "channels",
-            _fx("mean_r"), _fx("mean_g"), _fx("mean_b"),
-        )
-
-    q["q_media_features"] = _media_features
-
-    # REAL WAV decode twin of q_media_features: synthesize genuine
-    # 16-bit PCM payloads from nation ids, decode with the stdlib
-    # parser, emit exact summary features. mean_amp and rms are exact
-    # cross-engine: sample sums and sums-of-squares are integers below
-    # 2^53, so float64 accumulation is exact in ANY order, and the
-    # final division/sqrt are single IEEE ops
-    def _media_audio(spark, sf):
-        from demv_spark.operators.multimodal import (
-            audio_features,
-            synthesize_media_real,
-        )
-
-        ids = _t(spark, sf, "nation").select("n_nationkey")
-        media = synthesize_media_real(ids, "n_nationkey", kind="audio")
-        return audio_features(media).select(
-            "media_id", "n_samples", "sample_rate",
-            _fx("mean_amp"), _fx("rms"),
-        )
-
-    q["q_media_audio_features"] = _media_audio
 
     # stateful streaming drift monitor, batch-twin form (rows-only:
     # CUSUM state transition is the non-SQL custom operator)
@@ -8832,242 +8606,6 @@ def oracle_sql() -> dict[str, str]:
         FROM sh GROUP BY 1, 2
     """
 
-    o["q_media_dhash"] = """
-        WITH m AS (
-            SELECT CAST(n_nationkey AS BIGINT) AS media_id,
-                   CAST(n_nationkey % 64 + 16 AS INT) AS w,
-                   CAST(n_nationkey % 48 + 16 AS INT) AS h,
-                   ((n_nationkey*7) % 200) + ((n_nationkey*7 + 13) % 200)
-                   + ((n_nationkey*7 + 26) % 200) AS s3
-            FROM nation
-        ),
-        blocks AS (
-            SELECT m.media_id, m.w, m.h, i.i AS bi, j.j AS bj,
-                   SUM(m.s3 + 3 * ((x.x + y.y) % 50)) AS bsum,
-                   COUNT(*) AS area
-            FROM m,
-                 LATERAL (SELECT UNNEST(range(8)) AS i) i,
-                 LATERAL (SELECT UNNEST(range(9)) AS j) j,
-                 LATERAL (SELECT UNNEST(range(m.h)) AS y) y,
-                 LATERAL (SELECT UNNEST(range(m.w)) AS x) x
-            WHERE y.y >= (i.i * m.h) // 8 AND y.y < ((i.i + 1) * m.h) // 8
-              AND x.x >= (j.j * m.w) // 9 AND x.x < ((j.j + 1) * m.w) // 9
-            GROUP BY 1, 2, 3, 4, 5
-        ),
-        bits AS (
-            SELECT l.media_id, l.w, l.h, l.bi, l.bj,
-                   CAST(l.bsum * r.area > r.bsum * l.area AS INT) AS bit
-            FROM blocks l JOIN blocks r
-              ON l.media_id = r.media_id AND l.bi = r.bi AND r.bj = l.bj + 1
-            WHERE l.bj < 8
-        ),
-        nibbles AS (
-            SELECT media_id, w, h, (bi*8 + bj) // 4 AS nib,
-                   SUM(bit << (3 - (bi*8 + bj) % 4)) AS nv
-            FROM bits GROUP BY 1, 2, 3, 4
-        )
-        SELECT media_id, w, h,
-               string_agg(substr('0123456789abcdef', CAST(nv + 1 AS INT), 1),
-                          '' ORDER BY nib) AS dhash_hex
-        FROM nibbles GROUP BY 1, 2, 3
-    """
-
-    # image near-dup: the closed-form dHash SQL (same CTE the dhash
-    # row uses) chained into a brute-force popcount join over 32-bit
-    # hex slices — value-checks decode → hash → banded-pairs end-2-end
-    o["q_media_near_dup"] = f"""
-        WITH dh AS ({o["q_media_dhash"]}),
-        p AS (
-            SELECT a.media_id AS id_a, b.media_id AS id_b,
-                   CAST(bit_count(xor(
-                            CAST(concat('0x', substr(a.dhash_hex, 1, 8)) AS BIGINT),
-                            CAST(concat('0x', substr(b.dhash_hex, 1, 8)) AS BIGINT)))
-                      + bit_count(xor(
-                            CAST(concat('0x', substr(a.dhash_hex, 9, 8)) AS BIGINT),
-                            CAST(concat('0x', substr(b.dhash_hex, 9, 8)) AS BIGINT)))
-                        AS INT) AS dist
-            FROM dh a JOIN dh b ON a.media_id < b.media_id
-        )
-        SELECT id_a, id_b, dist FROM p WHERE dist <= 4
-    """
-
-    # JPEG dHash: the constant-tile fixture round-trips bit-exactly
-    # (see the query comment), so the decoded gray value is the
-    # closed-form g(x,y) = (id*7)%200 + ((x//8 + y//8 + id)%5)*11 and
-    # the dHash bits re-derive from integer block sums over the same
-    # floor-boundary 9x8 grid as the PNG oracle
-    _jpeg_dhash_sql = """
-        WITH m AS (
-            SELECT CAST(n_nationkey AS BIGINT) AS media_id,
-                   CAST(n_nationkey % 64 + 16 AS INT) AS w,
-                   CAST(n_nationkey % 48 + 16 AS INT) AS h
-            FROM nation
-        ),
-        blocks AS (
-            SELECT m.media_id, m.w, m.h, i.i AS bi, j.j AS bj,
-                   SUM((m.media_id*7) % 200
-                       + ((x.x // 8 + y.y // 8 + m.media_id) % 5) * 11) AS bsum,
-                   COUNT(*) AS area
-            FROM m,
-                 LATERAL (SELECT UNNEST(range(8)) AS i) i,
-                 LATERAL (SELECT UNNEST(range(9)) AS j) j,
-                 LATERAL (SELECT UNNEST(range(m.h)) AS y) y,
-                 LATERAL (SELECT UNNEST(range(m.w)) AS x) x
-            WHERE y.y >= (i.i * m.h) // 8 AND y.y < ((i.i + 1) * m.h) // 8
-              AND x.x >= (j.j * m.w) // 9 AND x.x < ((j.j + 1) * m.w) // 9
-            GROUP BY 1, 2, 3, 4, 5
-        ),
-        bits AS (
-            SELECT l.media_id, l.w, l.h, l.bi, l.bj,
-                   CAST(l.bsum * r.area > r.bsum * l.area AS INT) AS bit
-            FROM blocks l JOIN blocks r
-              ON l.media_id = r.media_id AND l.bi = r.bi AND r.bj = l.bj + 1
-            WHERE l.bj < 8
-        ),
-        nibbles AS (
-            SELECT media_id, w, h, (bi*8 + bj) // 4 AS nib,
-                   SUM(bit << (3 - (bi*8 + bj) % 4)) AS nv
-            FROM bits GROUP BY 1, 2, 3, 4
-        )
-        SELECT media_id, w, h,
-               string_agg(substr('0123456789abcdef', CAST(nv + 1 AS INT), 1),
-                          '' ORDER BY nib) AS dhash_hex
-        FROM nibbles GROUP BY 1, 2, 3
-    """
-
-    o["q_media_jpeg_near_dup"] = f"""
-        WITH dh AS ({_jpeg_dhash_sql}),
-        p AS (
-            SELECT a.media_id AS id_a, b.media_id AS id_b,
-                   CAST(bit_count(xor(
-                            CAST(concat('0x', substr(a.dhash_hex, 1, 8)) AS BIGINT),
-                            CAST(concat('0x', substr(b.dhash_hex, 1, 8)) AS BIGINT)))
-                      + bit_count(xor(
-                            CAST(concat('0x', substr(a.dhash_hex, 9, 8)) AS BIGINT),
-                            CAST(concat('0x', substr(b.dhash_hex, 9, 8)) AS BIGINT)))
-                        AS INT) AS dist
-            FROM dh a JOIN dh b ON a.media_id < b.media_id
-        )
-        SELECT id_a, id_b, dist FROM p WHERE dist <= 4
-    """
-
-    # color JPEG channel sums: the constant-tile fixture re-derived
-    # per tile — RGB from the mod-256 affine model, forward YCbCr and
-    # inverse transforms as FLOOR(left-assoc double expr + 0.5) with
-    # post-floor clip (bit-identical to the codec's floor(x+.5)
-    # numpy convention), weighted by the cropped tile's pixel count.
-    # Parameterized by tile size: 8 px for 4:4:4, 16 px for 4:2:0
-    # (subsampling's box-average of a constant macro-tile is the
-    # constant, so the SAME closed form holds at the MCU granularity)
-    _jpeg_color_oracle = """
-        WITH n AS (
-            SELECT CAST(n_nationkey AS BIGINT) AS id,
-                   n_nationkey % 64 + 16 AS w,
-                   n_nationkey % 48 + 16 AS h
-            FROM nation
-        ),
-        tiles AS (
-            SELECT id, w, h, bxs.bx, bys.by,
-                   (id * 7 + bxs.bx * 3 + bys.by * 5) % 256 AS r,
-                   (id * 11 + bxs.bx * 7 + bys.by * 2) % 256 AS g,
-                   (id * 13 + bxs.bx * 5 + bys.by * 7) % 256 AS b,
-                   LEAST({ts}, w - bxs.bx * {ts}) AS pw,
-                   LEAST({ts}, h - bys.by * {ts}) AS ph
-            FROM n
-            CROSS JOIN generate_series(0, 9) bxs(bx)
-            CROSS JOIN generate_series(0, 7) bys(by)
-            WHERE bxs.bx * {ts} < w AND bys.by * {ts} < h
-        ),
-        ycc AS (
-            SELECT id, w, h, pw, ph,
-                   GREATEST(0.0, LEAST(255.0, FLOOR(
-                       0.299*r + 0.587*g + 0.114*b + 0.5))) AS yv,
-                   GREATEST(0.0, LEAST(255.0, FLOOR(
-                       128.0 - 0.168735892*r - 0.331264108*g + 0.5*b
-                       + 0.5))) AS cbv,
-                   GREATEST(0.0, LEAST(255.0, FLOOR(
-                       128.0 + 0.5*r - 0.418687589*g - 0.081312411*b
-                       + 0.5))) AS crv
-            FROM tiles
-        ),
-        rgb2 AS (
-            SELECT id, w, h, pw, ph,
-                   GREATEST(0.0, LEAST(255.0, FLOOR(
-                       yv + 1.402*(crv - 128.0) + 0.5))) AS r2,
-                   GREATEST(0.0, LEAST(255.0, FLOOR(
-                       yv - 0.344136286*(cbv - 128.0)
-                          - 0.714136286*(crv - 128.0) + 0.5))) AS g2,
-                   GREATEST(0.0, LEAST(255.0, FLOOR(
-                       yv + 1.772*(cbv - 128.0) + 0.5))) AS b2
-            FROM ycc
-        )
-        SELECT id AS media_id,
-               CAST(w AS INTEGER) AS w, CAST(h AS INTEGER) AS h,
-               CAST(SUM(CAST(r2 AS BIGINT) * pw * ph) AS BIGINT) AS r_sum,
-               CAST(SUM(CAST(g2 AS BIGINT) * pw * ph) AS BIGINT) AS g_sum,
-               CAST(SUM(CAST(b2 AS BIGINT) * pw * ph) AS BIGINT) AS b_sum
-        FROM rgb2
-        GROUP BY 1, 2, 3
-    """
-    o["q_media_jpeg_color"] = _jpeg_color_oracle.format(ts=8)
-    o["q_media_jpeg420"] = _jpeg_color_oracle.format(ts=16)
-
-    # progressive JPEG: grayscale constant tiles decode bit-exactly
-    # (all AC zero; DC survives SA re-ordering), so each tile
-    # contributes value × cropped-tile-area to every channel sum
-    o["q_media_jpeg_progressive"] = """
-        WITH n AS (
-            SELECT CAST(n_nationkey AS BIGINT) AS id,
-                   n_nationkey % 64 + 16 AS w,
-                   n_nationkey % 48 + 16 AS h
-            FROM nation
-        ),
-        tiles AS (
-            SELECT id, w, h,
-                   ((id * 7) % 200 + ((bxs.bx + bys.by + id) % 5) * 11)
-                       AS v,
-                   least(8, w - bxs.bx * 8) AS tw,
-                   least(8, h - bys.by * 8) AS th
-            FROM n,
-                 LATERAL (SELECT unnest(generate_series(0, (w + 7) // 8 - 1)) AS bx) bxs,
-                 LATERAL (SELECT unnest(generate_series(0, (h + 7) // 8 - 1)) AS by) bys
-        )
-        SELECT id AS media_id,
-               CAST(w AS INTEGER) AS w,
-               CAST(h AS INTEGER) AS h,
-               CAST(SUM(v * tw * th) AS BIGINT) AS r_sum,
-               CAST(SUM(v * tw * th) AS BIGINT) AS g_sum,
-               CAST(SUM(v * tw * th) AS BIGINT) AS b_sum
-        FROM tiles GROUP BY 1, 2, 3
-    """
-
-    # GIF: lossless palette roundtrip — pixel(y, x) = palette[(id*3 +
-    # x + 2y) mod n] with the palette channels mod-256 affine in the
-    # entry index, summed exactly over the full pixel grid
-    o["q_media_gif_roundtrip"] = """
-        WITH n AS (
-            SELECT CAST(n_nationkey AS BIGINT) AS id,
-                   n_nationkey % 64 + 16 AS w,
-                   n_nationkey % 48 + 16 AS h,
-                   n_nationkey % 197 + 8 AS nc
-            FROM nation
-        ),
-        px AS (
-            SELECT id, w, h,
-                   (id * 3 + xs.x + 2 * ys.y) % nc AS ix
-            FROM n,
-                 LATERAL (SELECT unnest(generate_series(0, w - 1)) AS x) xs,
-                 LATERAL (SELECT unnest(generate_series(0, h - 1)) AS y) ys
-        )
-        SELECT id AS media_id,
-               CAST(w AS INTEGER) AS w,
-               CAST(h AS INTEGER) AS h,
-               CAST(SUM((ix * 7 + id) % 256) AS BIGINT) AS r_sum,
-               CAST(SUM((ix * 11 + 3) % 256) AS BIGINT) AS g_sum,
-               CAST(SUM((ix * 13 + 5 * id) % 256) AS BIGINT) AS b_sum
-        FROM px GROUP BY 1, 2, 3
-    """
-
     o["q_ml_auc"] = """
         WITH base AS (
             SELECT CAST(o_totalprice + (o_orderkey % 5000) AS DOUBLE) AS s,
@@ -9125,37 +8663,6 @@ def oracle_sql() -> dict[str, str]:
                CAST(SUM(y) AS BIGINT) AS n_pos,
                CAST(SUM(CAST(FLOOR(prob * 1000000.0 + 0.5) AS BIGINT)) AS BIGINT) AS sum_p6
         FROM base GROUP BY 1
-    """
-
-    o["q_media_audio_fp"] = """
-        WITH m AS (
-            SELECT CAST(n_nationkey AS BIGINT) AS media_id,
-                   CAST(8000 * (n_nationkey % 9000 + 1000) // 1000 AS BIGINT) AS n
-            FROM nation
-        ),
-        fr AS (
-            SELECT m.media_id, m.n, (i.i * 33) // m.n AS k,
-                   SUM(((m.media_id*31 + i.i*17) % 2048 - 1024)
-                       * ((m.media_id*31 + i.i*17) % 2048 - 1024)) AS e,
-                   COUNT(*) AS ln
-            FROM m, LATERAL (SELECT UNNEST(range(m.n)) AS i) i
-            GROUP BY 1, 2, 3
-        ),
-        bits AS (
-            SELECT l.media_id, l.n, l.k,
-                   CAST(l.e * r.ln > r.e * l.ln AS INT) AS bit
-            FROM fr l JOIN fr r ON l.media_id = r.media_id AND r.k = l.k + 1
-            WHERE l.k < 32
-        ),
-        nibbles AS (
-            SELECT media_id, n, k // 4 AS nib,
-                   SUM(bit << (3 - k % 4)) AS nv
-            FROM bits GROUP BY 1, 2, 3
-        )
-        SELECT media_id, n AS n_samples,
-               string_agg(substr('0123456789abcdef', CAST(nv + 1 AS INT), 1),
-                          '' ORDER BY nib) AS fp_hex
-        FROM nibbles GROUP BY 1, 2
     """
 
     o["q_etl_grouped_quantiles"] = """
@@ -10223,62 +9730,6 @@ def oracle_sql() -> dict[str, str]:
         FROM copied WHERE copies > 0
     """
 
-    _sql_media = """
-        SELECT o_orderkey AS media_id,
-               CAST(o_orderkey % 64 + 16 AS INTEGER) AS width,
-               CAST(o_orderkey % 48 + 16 AS INTEGER) AS height
-        FROM orders WHERE o_orderkey < 2000
-    """
-    o["q_media_resize_plan"] = f"""
-        WITH m AS ({_sql_media}),
-        s AS (
-            SELECT media_id, width, height,
-                   LEAST(CAST(56 AS DOUBLE) / width,
-                         CAST(56 AS DOUBLE) / height, 1.0) AS scale
-            FROM m
-        )
-        SELECT media_id, width, height, scale,
-               CAST(CEIL(width * scale) AS INTEGER) AS target_width,
-               CAST(CEIL(height * scale) AS INTEGER) AS target_height
-        FROM s
-    """
-    o["q_media_frame_sample"] = f"""
-        WITH m AS ({_sql_media}),
-        v AS (
-            SELECT media_id,
-                   LEAST(CAST(FLOOR(CAST(media_id % 9000 + 1000 AS DOUBLE) / 1000) AS INTEGER) + 1, 8) AS n_frames
-            FROM m
-        )
-        SELECT media_id, 'image' AS kind,
-               CAST(UNNEST(range(0, n_frames)) * 1000 AS INTEGER) AS frame_ts_ms
-        FROM v
-    """
-
-    # real-decode media: re-derive decoded dims + channel means from
-    # the synthesize_media_real closed form (pixel = (id*7 + c*13)%200
-    # + (x+y)%50): integer grid sums, one IEEE division — bit-exact
-    o["q_media_features"] = f"""
-        WITH m AS (
-            SELECT CAST(n_nationkey AS BIGINT) AS media_id,
-                   CAST(n_nationkey % 64 + 16 AS INT) AS w,
-                   CAST(n_nationkey % 48 + 16 AS INT) AS h
-            FROM nation
-        ),
-        g AS (
-            SELECT m.media_id, m.w, m.h,
-                   SUM((x.i + y.i) % 50) AS grad_sum
-            FROM m, LATERAL (SELECT UNNEST(range(m.w)) AS i) x,
-                    LATERAL (SELECT UNNEST(range(m.h)) AS i) y
-            GROUP BY 1, 2, 3
-        )
-        SELECT media_id, 'image' AS kind,
-               w AS decoded_width, h AS decoded_height, 3 AS channels,
-               {_fx_sql("CAST(((media_id*7) % 200) * w * h + grad_sum AS DOUBLE) / (w*h)", "mean_r")},
-               {_fx_sql("CAST(((media_id*7 + 13) % 200) * w * h + grad_sum AS DOUBLE) / (w*h)", "mean_g")},
-               {_fx_sql("CAST(((media_id*7 + 26) % 200) * w * h + grad_sum AS DOUBLE) / (w*h)", "mean_b")}
-        FROM g
-    """
-
     o["q_events_funnel"] = """
         WITH s1 AS (
             SELECT user_id, MIN(ts) AS t1 FROM events
@@ -10299,29 +9750,6 @@ def oracle_sql() -> dict[str, str]:
         SELECT 2, 'signup', COUNT(*) FROM s2
         UNION ALL
         SELECT 3, 'purchase', COUNT(*) FROM s3
-    """
-
-    o["q_media_audio_features"] = f"""
-        WITH m AS (
-            SELECT CAST(n_nationkey AS BIGINT) AS media_id,
-                   CAST(n_nationkey % 9000 + 1000 AS BIGINT) AS dur_ms
-            FROM nation
-        ),
-        s AS (SELECT media_id, (8000 * dur_ms) // 1000 AS n_samples FROM m),
-        samp AS (
-            SELECT s.media_id, s.n_samples,
-                   ((s.media_id * 31 + i.i * 17) % 2048) - 1024 AS v
-            FROM s, LATERAL (SELECT UNNEST(range(s.n_samples)) AS i) i(i)
-        ),
-        agg AS (
-            SELECT media_id, n_samples, SUM(v) AS sv, SUM(v * v) AS svv
-            FROM samp GROUP BY 1, 2
-        )
-        SELECT media_id, CAST(n_samples AS BIGINT) AS n_samples,
-               8000 AS sample_rate,
-               {_fx_sql("CAST(sv AS DOUBLE) / n_samples", "mean_amp")},
-               {_fx_sql("SQRT(CAST(svv AS DOUBLE) / n_samples)", "rms")}
-        FROM agg
     """
 
     o["q_ml_fold_sizes"] = """

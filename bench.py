@@ -185,13 +185,12 @@ HEADLINE = [
     # round-8: chunked broadcast ANN (10 md5 chunks at sf0.1, corpus
     # never shuffled), the two replayed streaming maintainers (index
     # latest-batch resolution; CDC latest-wins over the tagged union),
-    # ADASYN planted-line rowcheck (density-weighted applyInPandas
-    # synthesis), and real JPEG decode -> dHash -> banded pairs
+    # and the ADASYN planted-line rowcheck (density-weighted
+    # applyInPandas synthesis)
     "q_sim_topk_chunked",
     "q_stream_index_log",
     "q_stream_cdc_log",
     "q_demv_adasyn_rowcheck",
-    "q_media_jpeg_near_dup",
     # round-8 second wave: HLL (bounded-register shuffle + one
     # HUGEINT-exact division), Bloom semi-join pruning (fact never
     # shuffled, verdicts broadcast back), RAG chunk windows (map-only)
@@ -205,29 +204,23 @@ HEADLINE = [
     # the one-shot sketch by MAX-merge algebra)
     "q_stream_hll_log",
     # round-9: the full near-dup pipeline as one DAG (LSH pairs →
-    # components → keep-one → census), baseline COLOR JPEG decode
-    # (map-only Arrow batches), DSIR importance weights (two bounded
-    # bucket censuses + one broadcast join)
+    # components → keep-one → census), DSIR importance weights (two
+    # bounded bucket censuses + one broadcast join)
     "q_dedup_corpus_e2e",
-    "q_media_jpeg_color",
     "q_corpus_dsir_weights",
     # round-9: gap-timeout sessions → per-session training features
     # (one user-keyed shuffle, no joins)
     "q_events_session_features",
     # round-9: politeness-capped frontier over PageRank authority
     "q_web_crawl_frontier",
-    # round-9 second wave: replayed DSIR census log, 4:2:0 color JPEG,
-    # t-closeness (ordered-EMD numerator, one window pass)
+    # round-9 second wave: replayed DSIR census log, t-closeness
+    # (ordered-EMD numerator, one window pass)
     "q_stream_dsir_log",
-    "q_media_jpeg420",
     "q_privacy_t_closeness",
     # round-9 sixth wave: degree-oriented triangles, BPE apply census,
-    # GIF + progressive-JPEG roundtrips, robots politeness, PCA
-    # covariance census
+    # robots politeness, PCA covariance census
     "q_graph_triangles",
     "q_text_bpe_encode",
-    "q_media_gif_roundtrip",
-    "q_media_jpeg_progressive",
     "q_web_robots_politeness",
     "q_sim_covariance",
     "q_skew_salted_join",

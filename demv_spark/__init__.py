@@ -4,8 +4,7 @@ Re-expresses the full capability surface of the reference DEMV library
 (giordanoDaloisio/demv: group-balancing resampler, fairness-metric
 evaluator, feature ETL, CV evaluation harness) as declarative Spark
 DataFrame plans, plus the large-scale training-data-pipeline operators
-(dedup, similarity search, text analysis, multimodal plumbing) required
-at 100 TB scale.
+(dedup, similarity search, text analysis) required at 100 TB scale.
 
 Design stance (SURVEY.md §7):
 - DataFrame-first: every operator is a lazy plan built from

@@ -7,8 +7,7 @@ switching to white above half the max, class ticks, axis titles).
 matplotlib isn't a dependency of this engine, so the sink emits the
 same report as a hand-assembled single-page PDF — uncompressed
 content stream of `re f` fill and `Tj` text operators, Helvetica,
-exact xref table — the same zero-dep stance as the stdlib PNG/WAV
-codecs in operators/media_codecs.py.
+exact xref table.
 
 The DataFrame side stays distributed: `confusion_matrix_normalized`
 (functions/metrics.py) aggregates each partition's census; only the

@@ -510,8 +510,7 @@ def hamming_near_dup(
     """All pairs (id_a < id_b, dist) within ``max_hamming`` bits over
     ANY 64-bit integer hash column — the generic near-dup core behind
     SimHash text pairs and equally applicable to perceptual hashes
-    (``multimodal.image_dhash`` via the hex twin below, audio
-    fingerprints, embedding sign-sketches).
+    and embedding sign-sketches.
 
     Scale shape: the hash is split into ``bands`` contiguous
     bit-chunks (default max_hamming+1 — pigeonhole: a pair within
@@ -606,99 +605,6 @@ def hamming_near_dup(
         .distinct()
     )
     dist = F.bit_count(F.col("__h_a").bitwiseXOR(F.col("__h_b")))
-    return pairs.select(
-        "id_a", "id_b", dist.cast("int").alias("dist")
-    ).filter(F.col("dist") <= max_hamming)
-
-
-def hamming_near_dup_hex(
-    df: DataFrame,
-    id_col: str,
-    hex_col: str,
-    n_hex: int = 16,
-    max_hamming: int = 3,
-    bands: "Optional[int]" = None,
-    max_bucket: "Optional[int]" = None,
-) -> DataFrame:
-    """``hamming_near_dup`` for fixed-width HEX-STRING hashes (the
-    emission format of ``multimodal.image_dhash`` /
-    ``audio_fingerprint``, which exceed signed-64 when the top bit is
-    set). Bands are hex substrings (pigeonhole on character chunks);
-    the exact distance sums ``bit_count(xor)`` over 8-hex-char (32-
-    bit) slices so every conversion stays inside a signed long. Same
-    scale shape and knobs as the integer twin; the default band count
-    is the smallest divisor of ``n_hex`` honoring the pigeonhole
-    bound (bands ≥ max_hamming+1)."""
-    if bands is None:
-        bands = next(
-            (b for b in range(max_hamming + 1, n_hex + 1) if n_hex % b == 0),
-            None,
-        )
-        if bands is None:
-            raise ValueError(
-                f"no divisor of n_hex={n_hex} is >= max_hamming+1="
-                f"{max_hamming + 1}; pass bands explicitly"
-            )
-    if bands < max_hamming + 1:
-        raise ValueError(
-            f"bands={bands} < max_hamming+1={max_hamming + 1}: the "
-            "pigeonhole guarantee breaks — candidates would miss pairs"
-        )
-    if n_hex % bands != 0:
-        raise ValueError(f"n_hex={n_hex} must divide into bands={bands}")
-    chunk = n_hex // bands
-    # case-normalize at entry: band equality is a string compare but
-    # the verify distance (conv) is case-insensitive — without this,
-    # 'A1..' vs 'a1..' would never become a candidate despite
-    # distance 0
-    sig = df.select(
-        id_col, F.lower(F.col(hex_col)).alias(hex_col)
-    ).filter(F.col(hex_col).isNotNull())
-    banded = sig.select(
-        id_col,
-        hex_col,
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.substring(F.col(hex_col), b * chunk + 1, chunk)
-                    .alias("chunk"),
-                )
-                for b in range(bands)
-            ])
-        ).alias("bc"),
-    ).select(
-        id_col, hex_col,
-        F.col("bc.band").alias("band"), F.col("bc.chunk").alias("chunk"),
-    )
-    if max_bucket is not None:
-        w = Window.partitionBy("band", "chunk")
-        banded = banded.withColumn(
-            "__bn", F.count(F.lit(1)).over(w)
-        ).filter(F.col("__bn") <= max_bucket).drop("__bn")
-    pairs = (
-        banded.alias("a")
-        .join(
-            banded.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col(f"a.{hex_col}").alias("__h_a"),
-            F.col(f"b.{hex_col}").alias("__h_b"),
-        )
-        .distinct()
-    )
-    dist = None
-    for off in range(0, n_hex, 8):
-        width = min(8, n_hex - off)
-        a = F.conv(F.substring("__h_a", off + 1, width), 16, 10).cast("long")
-        b = F.conv(F.substring("__h_b", off + 1, width), 16, 10).cast("long")
-        d = F.bit_count(a.bitwiseXOR(b))
-        dist = d if dist is None else dist + d
     return pairs.select(
         "id_a", "id_b", dist.cast("int").alias("dist")
     ).filter(F.col("dist") <= max_hamming)

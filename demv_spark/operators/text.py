@@ -333,7 +333,7 @@ def bm25_topk(
     """BM25 ranked retrieval: the ``top_k`` documents for a bag of
     query terms, scored with INTEGER-EXACT fixed-point arithmetic —
     the engine's transcendental-free signature (same philosophy as
-    the integer-exact AUC and dHash). Robertson idf and the tf
+    the integer-exact AUC). Robertson idf and the tf
     saturation are both rational in (tf, df, dl, N, T) once k1 and b
     are rationals (parsed exactly via Fraction(str(k1))), so each
     per-term score is ONE integer division

@@ -160,18 +160,19 @@ def _conf_bytes(spark: SparkSession, key: str, default: int) -> int:
 
 
 def _est_scan_splits(spark: SparkSession, path: str, parallelism: int) -> int:
-    """Estimate the scan's split count from the FILES, not the plan.
+    """Estimate the scan's split count from the FILES, not the plan:
+    Spark's FilePartition.maxSplitBytes rule, ``maxSplit =
+    min(maxPartitionBytes, max(openCost, (bytes + nFiles*openCost) /
+    parallelism))`` and ``ceil(size / maxSplit)`` splits a file, redone
+    on os.stat data in ~0.1 ms (``df.rdd.getNumPartitions()`` costs a
+    ~60 ms py4j round trip). Many-tiny-file dirs (packing merges those)
+    are over-counted, which skips the spread only with >= 8 data files.
 
-    ``df.rdd.getNumPartitions()`` answers the same question but costs a
-    py4j round trip through RDD conversion (~60 ms per call, measured —
-    paid per table per query per bench rep). Spark's own split sizing is
-    deterministic from file sizes and two confs (FilePartition.maxSplitBytes):
-    ``maxSplit = min(maxPartitionBytes, max(openCost, (bytes + nFiles*openCost)
-    / parallelism))``, then splittable files are carved into
-    ``ceil(size / maxSplit)`` pieces. Replicating it on os.stat data is
-    exact for plain parquet paths and ~0.1 ms. Over-estimating for
-    many-tiny-file dirs (packing merges those) errs toward skipping the
-    repartition only when there are already >= 8 data files to spread."""
+    Splits are not reading tasks: parquet cannot split a row group, so
+    only the split holding a row group's midpoint reads it. A 21.6 MB
+    file of 2 row groups counts 4 splits at parallelism 4 and gets no
+    spread, yet only 2 of its 4 scan tasks read rows. Spreading it anyway
+    measured slower (1.50 vs 1.41 s DEMV fit + transform + write)."""
     import math
     import os as _os
 

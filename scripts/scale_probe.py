@@ -591,16 +591,6 @@ def main():
             cdc_log_replay(batches), ["k"], "ts", seq_col="seq"
         ).count()
 
-    def run_jpeg_dhash(d):
-        from demv_spark.operators.multimodal import (
-            image_dhash,
-            synthesize_media_real,
-        )
-
-        ids = d.filter(F.col("doc_id") % 8 == 0).select("doc_id")
-        media = synthesize_media_real(ids, "doc_id", kind="jpeg")
-        return image_dhash(media).count()
-
     def run_hll(d):
         from demv_spark.functions.sketches import hll_estimate, hll_registers
 
@@ -635,36 +625,6 @@ def main():
         return best_of_cluster(
             clusters, d.select("doc_id", F.col("n_chars").alias("quality"))
         ).count()
-
-    def run_jpeg_color(d):
-        from demv_spark.operators.multimodal import (
-            image_channel_sums,
-            synthesize_media_real,
-        )
-
-        ids = d.filter(F.col("doc_id") % 8 == 0).select("doc_id")
-        media = synthesize_media_real(ids, "doc_id", kind="jpeg_color")
-        return image_channel_sums(media).count()
-
-    def run_gif(d):
-        from demv_spark.operators.multimodal import (
-            image_channel_sums,
-            synthesize_media_real,
-        )
-
-        ids = d.filter(F.col("doc_id") % 8 == 0).select("doc_id")
-        media = synthesize_media_real(ids, "doc_id", kind="gif")
-        return image_channel_sums(media).count()
-
-    def run_jpeg_prog(d):
-        from demv_spark.operators.multimodal import (
-            image_channel_sums,
-            synthesize_media_real,
-        )
-
-        ids = d.filter(F.col("doc_id") % 8 == 0).select("doc_id")
-        media = synthesize_media_real(ids, "doc_id", kind="jpeg_prog")
-        return image_channel_sums(media).count()
 
     def run_dsir(d):
         from demv_spark.operators.corpus import dsir_weights
@@ -847,7 +807,6 @@ def main():
     probes = [
         ("session_features_30min", run_session_features, events, events_k),
         ("dedup_e2e_lsh_cc_keepone", run_dedup_e2e, docs, docs_k),
-        ("jpeg_color_encode_decode_sums", run_jpeg_color, docs, docs_k),
         ("dsir_weights_512buckets", run_dsir, docs, docs_k),
         ("hll_grouped_p8", run_hll, docs, docs_k),
         ("bloom_prune_fact", run_bloom_prune, orders, orders_k),
@@ -855,7 +814,6 @@ def main():
         ("topk_chunked_qx", run_topk_chunked, vecs_1, vecs_k),
         ("index_log_replay_resolve", run_index_log_replay, docs, docs_k),
         ("cdc_log_replay_snapshot", run_cdc_log_replay, orders, orders_k),
-        ("jpeg_encode_decode_dhash", run_jpeg_dhash, docs, docs_k),
         ("countmin_build", run_countmin, docs, docs_k),
         ("bloom_build_256kbits", run_bloom_build, docs, docs_k),
         ("kmv_grouped", run_kmv, docs, docs_k),
@@ -898,8 +856,6 @@ def main():
         ("hamming_planted_pairs", run_hamming_planted, docs, docs_k),
         ("bm25_batch_3q", run_bm25_batch, docs, docs_k),
         ("triangle_census", run_triangles, docs, docs_k),
-        ("gif_encode_decode_sums", run_gif, docs, docs_k),
-        ("jpeg_prog_encode_decode_sums", run_jpeg_prog, docs, docs_k),
         ("salted_skew_join", run_salted_join, orders, orders_k),
         ("hilbert_key_census", run_hilbert, orders, orders_k),
         ("pca_covariance_census", run_covariance, emb, emb_k),

@@ -190,10 +190,20 @@ def test_window_emissions_are_scalar_typed(spark, query_df):
     )
 
 
+# Families whose every query was deleted with its module, each with the
+# reason. A retired family has no query left to seat, so the family
+# check below skips it; every other family stays under the check, and
+# a family dropped without an entry here still fails.
+RETIRED_FAMILIES = {
+    "media": "image/audio codec modules deleted (ROADMAP direction 4)",
+}
+
+
 def test_window_keeps_every_recent_family_seated():
     """No family loses all its seats: every query-name family present
     in the NEWEST driver artifact keeps at least one seat in the
-    current window (family = the q_<family>_... prefix token)."""
+    current window (family = the q_<family>_... prefix token), unless
+    it is in RETIRED_FAMILIES."""
     import glob
     import json
 
@@ -202,7 +212,9 @@ def test_window_keeps_every_recent_family_seated():
     with open(artifacts[-1]) as f:
         prev = set(json.load(f))
     fam = lambda n: n.split("_")[1]
-    prev_fams = {fam(n) for n in prev}
+    live_fams = {fam(n) for n in entrymod.queries()}
+    assert not live_fams & set(RETIRED_FAMILIES), "retired family still has queries"
+    prev_fams = {fam(n) for n in prev} - set(RETIRED_FAMILIES)
     window_fams = {fam(n) for n in list(entrymod.queries())[:50]}
     missing = sorted(prev_fams - window_fams)
     assert not missing, f"families losing all window seats: {missing}"

@@ -892,3 +892,66 @@ def test_paper_path_tables_scan_no_python_rdd(spark, census_table, monkeypatch):
     (weighted,) = fit_inputs
     assert "__eg_w" in weighted.columns
     assert not plan_stats(weighted)["has_python_rdd"]
+
+
+# The modules the paper path loads: DEMV balancing, the fairness
+# metrics, the k-fold debias -> train -> metrics protocol and the CLI.
+PAPER_PATH_MODULES = {
+    "demv_spark",
+    "demv_spark.cli",
+    "demv_spark.functions",
+    "demv_spark.functions.compat",
+    "demv_spark.functions.counting",
+    "demv_spark.functions.metrics",
+    "demv_spark.ml",
+    "demv_spark.ml.cm_pdf",
+    "demv_spark.ml.eg",
+    "demv_spark.ml.evaluation",
+    "demv_spark.operators",
+    "demv_spark.operators.balancer",
+    "demv_spark.operators.etl",
+    "demv_spark.operators.postprocess",
+    "demv_spark.operators.strategies",
+    "demv_spark.session",
+    "demv_spark.sources",
+    "demv_spark.sources.readers",
+    "demv_spark.sources.recipes",
+    "demv_spark.sources.sinks",
+}
+
+
+def test_paper_path_import_closure():
+    """Importing the paper path's entry modules in a fresh interpreter
+    loads exactly PAPER_PATH_MODULES: an off-paper module that slips
+    into the closure (or a paper module that drops out) fails here."""
+    import os
+    import subprocess
+    import sys
+
+    entry = [
+        "demv_spark.cli",
+        "demv_spark.operators.strategies",
+        "demv_spark.operators.postprocess",
+        "demv_spark.ml.evaluation",
+        "demv_spark.ml.eg",
+        "demv_spark.ml.cm_pdf",
+        "demv_spark.functions.metrics",
+        "demv_spark.sources.readers",
+        "demv_spark.sources.sinks",
+        "demv_spark.sources.recipes",
+    ]
+    code = (
+        "import importlib, sys\n"
+        f"for m in {entry!r}: importlib.import_module(m)\n"
+        "print(*(n for n in sys.modules if n.split('.')[0] == 'demv_spark'))"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, check=True,
+        capture_output=True, text=True,
+    ).stdout
+    loaded = set(out.split())
+    assert loaded == PAPER_PATH_MODULES, (
+        f"entered: {sorted(loaded - PAPER_PATH_MODULES)}, "
+        f"left: {sorted(PAPER_PATH_MODULES - loaded)}"
+    )

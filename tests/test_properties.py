@@ -198,53 +198,6 @@ def test_temperature_targets_feasible_and_flattening(avails):
 
 # ---- round-8 pure-Python cores ----
 
-@settings(max_examples=25, deadline=None)
-@given(
-    h=st.integers(1, 80),
-    w=st.integers(1, 80),
-    seed=st.integers(0, 2**31 - 1),
-)
-def test_jpeg_constant_tiles_roundtrip_exact_property(h, w, seed):
-    """ANY image of constant 8x8 tiles (any dims incl. non-multiples
-    of 8, any tile values) survives encode->decode bit-exactly — the
-    lossless corner the driver oracle's closed-form pixel model rests
-    on, hammered across the dimension/value space."""
-    import numpy as np
-
-    from demv_spark.operators.media_codecs import decode_jpeg, encode_jpeg_gray
-
-    rng = np.random.RandomState(seed)
-    tiles = rng.randint(0, 256, size=(-(-h // 8), -(-w // 8)))
-    img = np.repeat(np.repeat(tiles, 8, 0), 8, 1)[:h, :w].astype(np.uint8)
-    dec = decode_jpeg(encode_jpeg_gray(img))
-    assert dec.shape == (h, w, 1)
-    assert np.array_equal(dec[:, :, 0], img)
-
-
-@settings(max_examples=15, deadline=None)
-@given(seed=st.integers(0, 2**31 - 1))
-def test_jpeg_unit_quant_near_lossless_property(seed):
-    """Arbitrary (non-tile) images at unit quant steps round-trip
-    within +-2: the general Huffman/run-length/IDCT path is exercised
-    on dense random AC spectra, not just DC-only blocks."""
-    import numpy as np
-
-    from demv_spark.operators.media_codecs import decode_jpeg, encode_jpeg_gray
-
-    rng = np.random.RandomState(seed)
-    h, w = rng.randint(8, 48), rng.randint(8, 48)
-    # smooth-ish field: random low-frequency mix keeps coefficients
-    # in the encodable range while still populating most AC slots
-    y, x = np.mgrid[0:h, 0:w]
-    img = 128.0
-    for _ in range(4):
-        fy, fx = rng.uniform(0, 0.5, 2)
-        img = img + rng.uniform(-40, 40) * np.sin(fy * y + fx * x + rng.uniform(0, 6))
-    img = np.clip(img, 0, 255).astype(np.uint8)
-    dec = decode_jpeg(encode_jpeg_gray(img, dc_step=1, ac_step=1))[:, :, 0]
-    assert int(np.abs(dec.astype(int) - img.astype(int)).max()) <= 2
-
-
 @settings(max_examples=300, deadline=None)
 @given(
     p=st.sampled_from([4, 6, 8]),
@@ -279,56 +232,6 @@ def test_hll_estimate_fixed_point_equals_fraction(p, regs):
     indicator = sum(Fraction(1, 1 << r) for r in regs) + (m - n_regs)
     est_ref = int(alpha * m * m / indicator)  # floor for positives
     assert est_engine == est_ref
-
-
-# ---- GIF LZW + progressive JPEG (round 9, sixth wave) ----
-
-@settings(max_examples=40, deadline=None)
-@given(
-    n=st.integers(2, 256),
-    h=st.integers(1, 40),
-    w=st.integers(1, 40),
-    seed=st.integers(0, 2**31 - 1),
-)
-def test_gif_roundtrip_property(n, h, w, seed):
-    """encode→decode is the identity on palette images for ANY
-    palette size (every min-code-size), shape, and content — the
-    lossless contract the driver oracle's closed form rests on."""
-    import numpy as np
-
-    from demv_spark.operators.media_codecs import decode_gif, encode_gif
-
-    rng = np.random.RandomState(seed)
-    pal = rng.randint(0, 256, (n, 3)).astype(np.uint8)
-    ix = rng.randint(0, n, (h, w)).astype(np.uint8)
-    assert np.array_equal(decode_gif(encode_gif(ix, pal)), pal[ix])
-
-
-@settings(max_examples=12, deadline=None)
-@given(
-    seed=st.integers(0, 2**31 - 1),
-    al=st.integers(0, 3),
-    split=st.integers(1, 62),
-)
-def test_jpeg_progressive_equals_baseline_property(seed, al, split):
-    """For ANY successive-approximation depth and ANY two-band
-    spectral split, the progressive stream carries the same quantized
-    coefficients as the baseline stream — decode equality is exact.
-    Randomized over content, SA depth and band split."""
-    import numpy as np
-
-    from demv_spark.operators import media_codecs as C
-
-    rng = np.random.RandomState(seed)
-    h, w = int(rng.randint(8, 40)), int(rng.randint(8, 40))
-    arr = rng.randint(0, 256, (h, w)).astype(np.uint8)
-    base = C.decode_jpeg(C.encode_jpeg_gray(arr))
-    prog = C.decode_jpeg(
-        C.encode_jpeg_progressive(
-            arr, ac_bands=((1, split), (split + 1, 63)), al=al
-        )
-    )
-    assert np.array_equal(base, prog)
 
 
 @settings(max_examples=60, deadline=None)

@@ -3,7 +3,6 @@ import random
 import pyspark.sql.functions as F
 import pytest
 
-from demv_spark.operators import multimodal
 from demv_spark.operators.balancer import DEMV
 
 
@@ -88,46 +87,6 @@ def test_synthetic_rows_interpolate_within_group_range(spark):
     lo, hi = df.agg(F.min("f1"), F.max("f1")).collect()[0]
     olo, ohi = out.agg(F.min("f1"), F.max("f1")).collect()[0]
     assert olo >= lo - 1e-9 and ohi <= hi + 1e-9
-
-
-def test_media_pipeline_end_to_end(spark):
-    base = spark.range(0, 50).withColumnRenamed("id", "media_id")
-    media = multimodal.synthesize_media(base, "media_id")
-    got = [(f.name, f.dataType) for f in media.schema.fields]
-    exp = [(f.name, f.dataType) for f in multimodal.MEDIA_SCHEMA.fields]
-    assert got == exp
-
-    feats = multimodal.extract_features(media, dim=8)
-    rows = feats.collect()
-    assert len(rows) == 50
-    assert all(len(r["feature"]) == 8 for r in rows)
-    # deterministic: same payload → same feature
-    again = {r["media_id"]: r["feature"] for r in multimodal.extract_features(media, dim=8).collect()}
-    for r in rows:
-        assert again[r["media_id"]] == r["feature"]
-
-
-def test_media_real_codecs_rejects_unrecognized_format(spark):
-    # the fake-format payloads (sha2 blobs) are NOT decodable media;
-    # the real path must fail loudly at the stub boundary, not emit
-    # garbage features (real decode is covered in test_media_codecs)
-    base = spark.range(0, 3).withColumnRenamed("id", "media_id")
-    media = multimodal.synthesize_media(base, "media_id")
-    with pytest.raises(Exception, match="NotImplementedError|unrecognized"):
-        multimodal.extract_features(media, real_codecs=True).collect()
-
-
-def test_resize_and_frame_sample_plans(spark):
-    base = spark.range(0, 10).withColumnRenamed("id", "media_id")
-    media = multimodal.synthesize_media(base, "media_id", kind="video").withColumn(
-        "duration_ms", F.lit(5000)
-    )
-    resized = multimodal.resize_plan(media, max_side=32).collect()
-    for r in resized:
-        assert max(r["target_width"], r["target_height"]) <= 32
-    frames = multimodal.frame_sample_plan(media, every_ms=1000, max_frames=4)
-    per = frames.groupBy("media_id").count().collect()
-    assert all(r["count"] == 4 for r in per)
 
 
 def test_lsh_smote_scale_path(spark):
@@ -382,77 +341,3 @@ def test_lsh_adasyn_zero_density_fallback_and_validation(spark):
     with _pytest.raises(ValueError, match="unknown strategy"):
         synthetic_rebalance_lsh(
             df, ["s0"], "y", targets, id_cols=["row_id"], strategy="borderline")
-
-
-def test_gif_frame_sums_composites_animation(spark):
-    """Multi-frame sampling over a REAL animated GIF: per-frame sums
-    equal local compositing; frames beyond the end are skipped."""
-    import numpy as np
-    import pandas as pd
-
-    from demv_spark.operators import media_codecs as C
-    from demv_spark.operators.multimodal import MEDIA_SCHEMA, gif_frame_sums
-    from tests.test_media_codecs import _animated_gif
-
-    pal = np.array([[9, 9, 9], [250, 0, 0], [0, 250, 0]], dtype=np.uint8)
-    full = np.ones((3, 3), np.uint8)
-    patch = np.full((2, 2), 2, np.uint8)
-    gif = _animated_gif(3, 3, pal, [
-        (0, 0, full, 1, None),
-        (1, 1, patch, 1, None),
-    ])
-    rows = [(7, "image", "gif", gif, 3, 3, None)]
-    media = spark.createDataFrame(
-        pd.DataFrame(rows, columns=[f.name for f in MEDIA_SCHEMA.fields]),
-        schema=MEDIA_SCHEMA,
-    )
-    got = {
-        r["frame"]: (r["r_sum"], r["g_sum"], r["b_sum"])
-        for r in gif_frame_sums(media, frames=(0, 1, 5)).collect()
-    }
-    f0 = C.decode_gif(gif, 0).astype(np.int64).sum(axis=(0, 1))
-    f1 = C.decode_gif(gif, 1).astype(np.int64).sum(axis=(0, 1))
-    assert got == {0: tuple(f0), 1: tuple(f1)}  # frame 5 skipped
-    assert got[0] != got[1]
-
-
-def test_gif_frame_sums_corrupt_skip_drops_whole_media(spark):
-    """on_corrupt='skip' drops the ENTIRE media_id: a GIF truncated
-    after frame 0 decodes frame 0 fine then raises at frame 1, and the
-    frame-0 rows already appended must go with it (round-10 ADVICE —
-    the docstring promises whole-media drops, not partial retention).
-    A healthy sibling in the same batch keeps all its rows."""
-    import numpy as np
-    import pandas as pd
-    import pytest as _pytest
-
-    from demv_spark.operators import media_codecs as C
-    from demv_spark.operators.multimodal import MEDIA_SCHEMA, gif_frame_sums
-    from tests.test_media_codecs import _animated_gif
-
-    pal = np.array([[9, 9, 9], [250, 0, 0], [0, 250, 0]], dtype=np.uint8)
-    full = np.ones((3, 3), np.uint8)
-    patch = np.full((2, 2), 2, np.uint8)
-    good = _animated_gif(3, 3, pal, [
-        (0, 0, full, 1, None),
-        (1, 1, patch, 1, None),
-    ])
-    # truncate mid-frame-1: frame 0 decodes, frame 1 raises ValueError
-    bad = good[: len(good) - 6]
-    C.decode_gif(bad, 0)  # still healthy at frame 0
-    with _pytest.raises(ValueError):
-        C.decode_gif(bad, 1)
-    rows = [
-        (1, "image", "gif", good, 3, 3, None),
-        (2, "image", "gif", bad, 3, 3, None),
-    ]
-    media = spark.createDataFrame(
-        pd.DataFrame(rows, columns=[f.name for f in MEDIA_SCHEMA.fields]),
-        schema=MEDIA_SCHEMA,
-    )
-    out = gif_frame_sums(media, frames=(0, 1), on_corrupt="skip").collect()
-    assert {r["media_id"] for r in out} == {1}
-    assert sorted(r["frame"] for r in out) == [0, 1]
-    # and the default surfaces the corruption instead of hiding it
-    with _pytest.raises(Exception):
-        gif_frame_sums(media, frames=(0, 1)).collect()

@@ -1019,31 +1019,6 @@ def test_hamming_near_dup_matches_brute_force(spark):
     assert got == want and want  # non-trivial fixture
 
 
-def test_hamming_near_dup_hex_matches_brute_force(spark):
-    import random
-
-    rng = random.Random(11)
-    rows = []
-    rid = 0
-    for _ in range(10):
-        h = rng.getrandbits(64)
-        for flips in (0, 2, 5):
-            m = 0
-            for i in range(flips):
-                m |= 1 << ((rid * 7 + i * 19) % 64)
-            rows.append((rid, format(h ^ m, "016x")))
-            rid += 1
-    df = spark.createDataFrame(rows, "id long, hx string")
-    got = {
-        (r["id_a"], r["id_b"]): r["dist"]
-        for r in dedup.hamming_near_dup_hex(
-            df, "id", "hx", n_hex=16, max_hamming=4
-        ).collect()
-    }
-    want = _brute_hamming([(i, int(h, 16)) for i, h in rows], 4)
-    assert got == want and want
-
-
 def test_hamming_near_dup_guards_and_bucket_cap(spark):
     import pytest as _pytest
 
@@ -1133,17 +1108,6 @@ def test_bm25_topk_normalizes_query_case(spark):
     b = text.bm25_topk(df, ["spark", "table"], top_k=5).collect()
     assert [tuple(r) for r in a] == [tuple(r) for r in b]
     assert a and a[0]["doc_id"] == 1 and a[0]["n_terms"] == 2
-
-
-def test_hamming_near_dup_hex_case_insensitive(spark):
-    df = spark.createDataFrame(
-        [(1, "A1B2C3D4E5F60718"), (2, "a1b2c3d4e5f60718")],
-        "id long, hx string",
-    )
-    out = dedup.hamming_near_dup_hex(df, "id", "hx", n_hex=16, max_hamming=0)
-    assert [(r["id_a"], r["id_b"], r["dist"]) for r in out.collect()] == [
-        (1, 2, 0)
-    ]
 
 
 def test_bm25_batch_equals_single_and_salt_invariant(spark):
